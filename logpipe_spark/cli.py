@@ -12,6 +12,12 @@ the transformer array became a logical plan (SURVEY.md §3.1).
 
 Sink dispatch keeps the reference priority (``bin/logpipe.js:82-120``):
 ``--route-dir`` (fan-out, supersedes single sinks) > ``-o`` file > console.
+
+``--route-dir DIR`` runs ``run_pipeline_fanout``: one ``partitionBy(sink)``
+parquet write, so each non-empty sink is a Hive-style ``DIR/sink=<name>/``
+directory and ``DIR`` reads back as one table with a ``sink`` column (an
+empty sink gets no directory). It prints ``sink <name>: DIR/sink=<name>
+(<n> rows)`` per sink.
 """
 
 from __future__ import annotations
@@ -221,15 +227,13 @@ def main(argv: list[str] | None = None) -> int:
             df, obs = observe_malformed(df)
 
         if args.route_dir:  # full pipeline fan-out (supersedes single sink)
-            from logpipe_spark.operators.router import write_routed
-            from logpipe_spark.plans.pipeline import (enrich_stage,
-                                                      parse_stage,
-                                                      route_stage)
+            from logpipe_spark.plans.pipeline import run_pipeline_fanout
             with pstage("pipeline_fanout"):
-                enriched = enrich_stage(spark, parse_stage(df))
-                paths = write_routed(route_stage(enriched), args.route_dir)
-            for name, path in sorted(paths.items()):
-                print(f"sink {name}: {path}")
+                out = run_pipeline_fanout(spark, df, args.route_dir)
+                per_sink = out["agg_per_sink"].collect()
+            for r in sorted(per_sink, key=lambda r: r.sink):
+                print(f"sink {r.sink}: {args.route_dir}/sink={r.sink} "
+                      f"({r.turn_count} rows)")
             _warn_malformed(obs)
             pwrite()
             return 0

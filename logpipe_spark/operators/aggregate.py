@@ -2806,7 +2806,6 @@ def jackknife_ratio(
                        F.col("_g").alias("_go"), r_g.alias("_r"))
               .groupBy(key, "n_groups", "_sx", "_sy")
               .agg(
-                  F.min(F.col("_r").isNull().cast("int")).alias("_ok"),
                   F.sum(F.col("_r").isNull().cast("int")).alias("_bad"),
                   F.aggregate(
                       F.transform(

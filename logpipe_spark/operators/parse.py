@@ -7,18 +7,9 @@ per-line ``JSON.parse`` with drop-on-error, we run a vectorized regex over the
 (``error_kind``) for the router — the Spark analog of "drop malformed with
 capped logging" is "route malformed, never crash" (PERMISSIVE semantics).
 
-Two execution paths, both vectorized (input_hint: no per-row Python):
-
-1. **Builtin** (default): one ``regexp_extract`` per field — JVM-side,
-   whole-stage-codegen'd, pushdown-friendly. N fields → N regex evaluations.
-2. **Single-pass pandas UDF**: one Arrow-batched ``Series.str.extract`` that
-   returns a struct of all fields in a single regex pass — a candidate when
-   the pattern is expensive and fields are many.
-
-Measured (2M rows, 4 fields, local[32], best-of-3 warm): builtin 2.19 s vs
-single-pass 7.42 s — whole-stage codegen + no Arrow round-trip beats the
-one-regex-pass saving by 3.4× at this field count, so builtin is the
-default. Re-measure before flipping for patterns with 10+ expensive fields.
+There is one path, one codegen'd ``regexp_extract`` per field, because it
+beat an Arrow-batched pandas single-regex variant 2.19 s to 7.42 s (2M rows,
+4 fields, local[32], best-of-3 warm).
 """
 
 from __future__ import annotations
@@ -26,10 +17,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Grok-style named pattern registry (public grok pattern names).
 GROK_PATTERNS: dict[str, str] = {
@@ -95,61 +84,32 @@ def parse_grok(
     text_col: str = "text",
     grok: CompiledGrok = TRANSCRIPT_COMPILED,
     error_col: str = "error_kind",
-    single_pass: bool = False,
 ) -> DataFrame:
     """Extract grok fields from ``text_col``; tag unparsable rows.
 
     ``error_kind``: 'blank' for empty/whitespace text (≙ blank-line skip,
     ndjsonParser.js:50), 'malformed' for regex-miss (≙ JSON.parse failure,
-    ndjsonParser.js:99-115), NULL for clean rows.
+    ndjsonParser.js:99-115), NULL for clean rows. An ``error_col`` the
+    input already carries (the NDJSON reader's 'malformed' for an
+    unparsable JSON line) wins over the grok verdict.
     """
     text = F.col(text_col)
     matched = text.rlike(grok.regex)
-    if single_pass:
-        out = _single_pass_struct(df, text_col, grok)
-    else:
-        out = df
-        for i, (name, typ) in enumerate(zip(grok.fields, grok.types), start=1):
-            out = out.withColumn(
-                name,
-                _cast_extracted(F.regexp_extract(text, grok.regex, i),
-                                matched, typ),
-            )
-    return out.withColumn(
-        error_col,
+    out = df
+    for i, (name, typ) in enumerate(zip(grok.fields, grok.types), start=1):
+        out = out.withColumn(
+            name,
+            _cast_extracted(F.regexp_extract(text, grok.regex, i),
+                            matched, typ),
+        )
+    verdict = (
         F.when(text.isNull() | (F.trim(text) == ""), F.lit("blank"))
         .when(~matched, F.lit("malformed"))
-        .otherwise(F.lit(None).cast("string")),
+        .otherwise(F.lit(None).cast("string"))
     )
-
-
-def _single_pass_struct(df: DataFrame, text_col: str, grok: CompiledGrok) -> DataFrame:
-    """One Arrow-batched regex pass extracting every field at once."""
-    struct_type = T.StructType(
-        [T.StructField(f, T.StringType(), True) for f in grok.fields]
-    )
-    pattern = grok.regex
-    fields = list(grok.fields)
-
-    @F.pandas_udf(struct_type)
-    def extract_all(s: pd.Series) -> pd.DataFrame:
-        ext = s.astype("string").str.extract(pattern)
-        ext.columns = fields
-        return ext
-
-    out = df.withColumn("_g", extract_all(F.col(text_col)))
-    # gate every field on the SAME Java-regex match flag the error_kind
-    # column uses — Python's str.extract has wider character classes
-    # (\d matches Unicode digits), so without the gate a Java-side miss
-    # could ship a 'malformed' row with populated fields, and the
-    # Python-extracted non-ASCII digits would make the ANSI int cast
-    # THROW. _cast_extracted applies the identical matched/empty/cast
-    # discipline as the per-field builtin path.
-    matched = F.col(text_col).rlike(grok.regex)
-    for name, typ in zip(grok.fields, grok.types):
-        out = out.withColumn(
-            name, _cast_extracted(F.col(f"_g.{name}"), matched, typ))
-    return out.drop("_g")
+    if error_col in df.columns:
+        verdict = F.coalesce(F.col(error_col), verdict)
+    return out.withColumn(error_col, verdict)
 
 
 def reassemble_text(df: DataFrame) -> Column:

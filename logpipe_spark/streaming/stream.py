@@ -206,11 +206,10 @@ def stream_route_fanout(spark: SparkSession, stream: DataFrame,
                                               parse_stage)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # single-pass fan-out per micro-batch: ONE write job tagged by sink
-        # (the per-sink-job variant leaked a persisted batch each trigger
-        # and paid N jobs x fixed cost per batch)
-        cfg = PipelineConfig(persist_fanout=False)
-        enriched = enrich_stage(spark, parse_stage(batch_df, cfg), cfg)
+        # single-pass fan-out per micro-batch: ONE write job tagged by sink,
+        # so the batch feeds one job and is never persisted
+        cfg = PipelineConfig()
+        enriched = enrich_stage(spark, parse_stage(batch_df))
         exploded = route_single_pass(enriched,
                                      standard_rules(cfg.tools, cfg.roles))
         exploded.write.mode("append").partitionBy("sink").parquet(base_dir)

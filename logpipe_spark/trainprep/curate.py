@@ -944,9 +944,9 @@ def t_closeness(df: DataFrame, quasi_cols: list[str], value,
 
     vi = value.cast("bigint")
     base = df.where(vi.isNotNull()).select(*quasi_cols, vi.alias("_v"))
-    qkey = F.concat_ws(
-        "\\u0001", *[F.coalesce(F.col(c).cast("string"), F.lit("\\u0000"))
-                     for c in quasi_cols])
+    # JSON of the quasi struct: an injective class key (a separator-joined
+    # string merges classes whose values contain the separator)
+    qkey = F.to_json(F.struct(*quasi_cols))
     rows = base.select(qkey.alias("_q"), *quasi_cols, "_v")
     cls = (rows.groupBy("_q", *quasi_cols, "_v")
            .agg(F.count(F.lit(1)).cast("bigint").alias("_cc")))

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import re
 import subprocess
 import sys
 
@@ -78,17 +79,33 @@ def test_cli_end_to_end_subprocess(tmp_path):
          "text": "garbled", "tool": "bash",
          "ts": "2026-01-01T00:00:05Z"},
     ]
-    src.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
+    broken = json.dumps({**rows[0], "turn_idx": 2})[:-1]  # no closing brace
+    src.write_text("\n".join(json.dumps(r) for r in rows)
+                   + "\n" + broken + "\n")
     out = tmp_path / "sinks"
     r = subprocess.run(
         [sys.executable, "-m", "logpipe_spark.cli", "-i", str(src),
          "--route-dir", str(out), "--parallel", "2"],
         capture_output=True, text=True, timeout=300, cwd="/root/repo")
     assert r.returncode == 0, r.stderr[-2000:]
-    assert "sink error" in r.stdout
     import pyarrow.parquet as pq
-    err = pq.read_table(str(out / "sink_error")).to_pandas()
-    assert len(err) == 1 and err.conv_id[0] == "c1" and err.turn_idx[0] == 1
+
+    # every printed per-sink count equals the rows read back from its
+    # Hive-style sink=<name> directory
+    printed = re.findall(r"^sink (\S+): (\S+) \((\d+) rows\)$", r.stdout,
+                         re.MULTILINE)
+    assert {name for name, _, _ in printed} == {
+        "error", "role_user", "tool_none"}
+    for name, path, n in printed:
+        assert path == f"{out}/sink={name}"
+        assert pq.read_table(path).num_rows == int(n), name
+    assert not [p.name for p in out.iterdir() if p.name.startswith("sink_")]
+
+    err = pq.read_table(str(out / "sink=error")).to_pandas()
+    assert sorted(zip(err.raw, err.error_kind)) == sorted([
+        (broken, "malformed"), (json.dumps(rows[1]), "malformed")])
+    # the read-side counter sees only the broken JSON line
+    assert "1 of 3 input lines malformed" in r.stderr
 
 
 def test_cli_csv_quote_escape_skip_subprocess(tmp_path):

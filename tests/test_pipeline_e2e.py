@@ -4,15 +4,21 @@ and skew-salting equivalence."""
 
 from __future__ import annotations
 
+import json
+from collections import Counter
+from pathlib import Path
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from logpipe_spark.operators.router import route_single_pass, standard_rules
 from logpipe_spark.operators.skew import (salted_conv_spans,
                                           salted_count_by, salted_stats_by)
 from logpipe_spark.plans.checkpoint import Stage, is_committed, read_manifest, run_stages
-from logpipe_spark.plans.pipeline import run_pipeline
+from logpipe_spark.plans.pipeline import run_pipeline_fanout
 from logpipe_spark.synth import synth_transcripts
+from logpipe_spark.transcripts import ROLES, TOOLS
 
 
 @pytest.fixture(scope="module")
@@ -21,47 +27,80 @@ def corpus(spark):
                              error_every=20, hot_conv_fraction=0.3)
 
 
-def _key(df):
-    return df[["conv_id", "turn_idx"]].apply(tuple, axis=1)
+@pytest.fixture(scope="module")
+def fanout(spark, corpus, tmp_path_factory):
+    """run_pipeline_fanout's outputs plus its sinks read back as one table."""
+    base = str(tmp_path_factory.mktemp("fanout"))
+    out = run_pipeline_fanout(spark, corpus, base)
+    return out, spark.read.parquet(base)
 
 
-def test_routed_row_equality(spark, corpus):
-    """Each sink's rows equal the pandas oracle's routed set (sorted sets)."""
-    out = run_pipeline(spark, corpus)
+def _keys(df):
+    return sorted(zip(df.conv_id, df.turn_idx))
+
+
+def test_routed_row_equality(spark, corpus, fanout):
+    """Every written sink's rows equal the pandas oracle's routed set
+    (sorted sets), and so do the agg_per_sink counts."""
+    out, written = fanout
     pdf = corpus.toPandas()
     blank = pdf.text.str.strip() == ""
     malformed = ~blank & ~pdf.text.str.contains(" -> ", regex=False)
-    err = pdf[blank | malformed]
     clean = pdf[~(blank | malformed)]
 
-    got_err = out["sink_error"].select("conv_id", "turn_idx").toPandas()
-    assert sorted(_key(got_err)) == sorted(_key(err))
+    want = {"error": pdf[blank | malformed], "overflow": clean.iloc[:0]}
+    want |= {f"tool_{t}": clean[clean.tool == t] for t in TOOLS}
+    want |= {f"role_{r}": clean[clean.role == r] for r in ROLES}
+    rule_names = {r.name for r in standard_rules(list(TOOLS), list(ROLES))}
+    assert set(want) == rule_names | {"error", "overflow"}
 
-    for tool in ["bash", "search"]:
-        got = out[f"sink_tool_{tool}"].select("conv_id", "turn_idx").toPandas()
-        want = clean[clean.tool == tool]
-        assert sorted(_key(got)) == sorted(_key(want)), f"tool sink {tool}"
-    for role in ["user", "system"]:
-        got = out[f"sink_role_{role}"].select("conv_id", "turn_idx").toPandas()
-        want = clean[clean.role == role]
-        assert sorted(_key(got)) == sorted(_key(want)), f"role sink {role}"
+    got = written.select("sink", "conv_id", "turn_idx").toPandas()
+    assert set(got.sink) <= set(want)
+    for name, rows in want.items():
+        assert _keys(got[got.sink == name]) == _keys(rows), f"sink {name}"
 
-    # per-sink aggregate counts match the oracle
-    counts = out["agg_tool_bash_counts"].collect()
-    assert counts[0]["turn_count"] == (clean.tool == "bash").sum()
+    counts = {r.sink: r.turn_count for r in out["agg_per_sink"].collect()}
+    assert counts == {k: len(v) for k, v in want.items() if len(v)}
 
     # per-turn text equality under stable (conv_id, turn_idx) ordering
-    got_txt = (out["sink_role_user"].orderBy("conv_id", "turn_idx")
+    got_txt = (written.filter(F.col("sink") == "role_user")
+               .orderBy("conv_id", "turn_idx")
                .select("text").toPandas().text.tolist())
     want_txt = (clean[clean.role == "user"]
                 .sort_values(["conv_id", "turn_idx"]).text.tolist())
     assert got_txt == want_txt
 
+    assert set(written.columns) == set(out["_enriched"].columns) | {"sink"}
 
-def test_overflow_sink_empty_when_rules_cover(spark, corpus):
-    out = run_pipeline(spark, corpus)
-    # tools+roles rules cover every clean row → overflow empty
-    assert out["sink_overflow"].count() == 0
+
+def test_overflow_sink_empty_when_rules_cover(fanout):
+    out, written = fanout
+    # tools+roles rules cover every clean row → overflow empty, no directory
+    assert "overflow" not in {r.sink for r in out["agg_per_sink"].collect()}
+    assert written.filter(F.col("sink") == "overflow").count() == 0
+    assert not (Path(out["sink_dir"]) / "sink=overflow").exists()
+
+
+def test_ndjson_malformed_line_routes_to_error_as_malformed(spark, tmp_path):
+    """A JSON line the reader cannot parse keeps the reader's 'malformed'
+    through parse and lands in sink=error (its NULL text must not turn it
+    into 'blank')."""
+    from logpipe_spark.schemas import TRANSCRIPT_SCHEMA
+    from logpipe_spark.sources import read_ndjson
+
+    src = tmp_path / "in.ndjson"
+    good = {"conv_id": "c1", "turn_idx": 0, "role": "user",
+            "text": "GET /a -> 200: ok", "tool": "none",
+            "ts": "2026-01-01T00:00:00Z"}
+    broken = json.dumps({**good, "turn_idx": 1})[:-1]   # no closing brace
+    src.write_text(json.dumps(good) + "\n" + broken + "\n")
+    base = tmp_path / "sinks"
+    run_pipeline_fanout(spark, read_ndjson(spark, str(src), TRANSCRIPT_SCHEMA),
+                        str(base))
+    err = spark.read.parquet(str(base / "sink=error")).collect()
+    assert [(r.raw, r.error_kind) for r in err] == [(broken, "malformed")]
+    routed = spark.read.parquet(str(base)).filter(F.col("sink") != "error")
+    assert {r.turn_idx for r in routed.collect()} == {0}
 
 
 def test_checkpoint_resume_skips_committed(spark, corpus, tmp_path):
@@ -232,58 +271,18 @@ def test_heavy_key_detection(spark, corpus):
     assert hot == {"conv-000000"}
 
 
-def test_write_routed_round_trip(spark, corpus, tmp_path):
-    from logpipe_spark.operators.router import write_routed
-
-    out = run_pipeline(spark, corpus)
-    routed = {k.removeprefix("sink_"): v for k, v in out.items()
-              if k.startswith("sink_") and k in ("sink_error", "sink_tool_bash")}
-    paths = write_routed(routed, str(tmp_path))
-    for name, path in paths.items():
-        back = spark.read.parquet(path)
-        assert back.count() == routed[name].count()
-        assert set(back.columns) == set(routed[name].columns)
-
-
-def test_single_pass_fanout_equals_route(spark, corpus, tmp_path):
-    """route_single_pass + partitionBy write ≡ route() per-sink views."""
-    from logpipe_spark.operators.router import (route, route_single_pass,
-                                                standard_rules,
-                                                write_fanout_single_pass)
-    from logpipe_spark.plans.pipeline import (PipelineConfig, enrich_stage,
-                                              parse_stage)
-    from logpipe_spark.transcripts import ROLES, TOOLS
-
-    enriched = enrich_stage(spark, parse_stage(corpus))
-    rules = standard_rules(list(TOOLS), list(ROLES))
-    multi = route(enriched, rules, persist=False)
-    base = str(tmp_path / "fan")
-    write_fanout_single_pass(route_single_pass(enriched, rules), base)
-    written = spark.read.parquet(base)
-    for name, view in multi.items():
-        got = written.filter(F.col("sink") == name)
-        gk = sorted(map(tuple, got.select("conv_id", "turn_idx").collect()))
-        wk = sorted(map(tuple, view.select("conv_id", "turn_idx").collect()))
-        assert gk == wk, f"sink {name}"
-
-
 def test_null_rule_columns_land_in_overflow(spark):
     """Rows whose rule columns are NULL must not vanish — they belong to
     overflow (three-valued-logic regression test)."""
-    from logpipe_spark.operators.router import (route, route_single_pass,
-                                                standard_rules)
-
     df = spark.createDataFrame(
         [("c1", 0, "user", "hi", "bash", None),
          ("c2", 0, None, "yo", None, None)],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, error_kind string")
-    rules = standard_rules(["bash"], ["user"])
-    routed = route(df, rules, persist=False)
-    total_out = {n: v.count() for n, v in routed.items()}
-    assert total_out["overflow"] == 1  # the null-role/null-tool row
-    assert total_out["tool_bash"] == 1 and total_out["role_user"] == 1
-    exploded = route_single_pass(df, rules)
+    exploded = route_single_pass(df, standard_rules(["bash"], ["user"]))
+    # the null-role/null-tool row lands in overflow and nowhere else
+    assert Counter(r.sink for r in exploded.collect()) == {
+        "overflow": 1, "tool_bash": 1, "role_user": 1}
     sinks = {r.sink for r in exploded.filter("conv_id = 'c2'").collect()}
     assert sinks == {"overflow"}
 
@@ -291,12 +290,9 @@ def test_null_rule_columns_land_in_overflow(spark):
 def test_sink_quota_overflow(spark, corpus):
     """Rows beyond a sink's quota re-route to overflow, deterministically
     (first-N under (conv_id, turn_idx) ordering stay)."""
-    from logpipe_spark.operators.router import (apply_sink_quotas,
-                                                route_single_pass,
-                                                standard_rules)
+    from logpipe_spark.operators.router import apply_sink_quotas
     from logpipe_spark.plans.pipeline import (PipelineConfig, enrich_stage,
                                               parse_stage)
-    from logpipe_spark.transcripts import ROLES, TOOLS
 
     cfg = PipelineConfig()
     enriched = enrich_stage(spark, parse_stage(corpus, cfg), cfg)

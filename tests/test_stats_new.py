@@ -1926,6 +1926,23 @@ def test_t_closeness_hand_case(spark):
         assert abs(out[c].t - 1.0 / 6.0) < 1e-12
 
 
+def test_t_closeness_multi_column_classes_do_not_collide(spark):
+    # Two classes whose quasi values, joined with a six-character
+    # "\u0001" separator, spell the same key: each must stay its own
+    # class (the hand case above, split over q1, q2).
+    from logpipe_spark.trainprep.curate import t_closeness
+
+    a, b = ("x\\u0001y", "z"), ("x", "y\\u0001z")
+    rows = [(*a, 0), (*a, 0), (*a, 10), (*b, 10), (*b, 10), (*b, 0)]
+    df = spark.createDataFrame(rows, "q1 string, q2 string, v long")
+    out = {(r.q1, r.q2): r for r in t_closeness(df, ["q1", "q2"],
+                                                F.col("v")).collect()}
+    assert set(out) == {a, b}
+    for c in (a, b):
+        assert out[c].class_size == 3 and out[c].n_total == 6
+        assert abs(out[c].t - 1.0 / 6.0) < 1e-12
+
+
 def test_conformal_interval_hand_case(spark):
     # residuals 1..10 -> target rank ceil(11*0.9) = 10 -> radius 10;
     # n=5 cannot certify 90% (target 6 > 5) -> NULL radius.

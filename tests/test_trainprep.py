@@ -175,22 +175,22 @@ def test_cosine_near_dup_bucket_scaling(spark):
 
 def test_parse_empty_msg_roundtrip_both_paths(spark):
     """'GET /x -> 200: ' (matched-empty GREEDYDATA msg) is clean, msg=''
-    in BOTH parse paths, and round-trips to the original text."""
+    on the builtin parse path (the only one), and round-trips to the
+    original text."""
     from logpipe_spark.operators.parse import parse_grok, reassemble_text
 
     df = spark.createDataFrame(
         [("c1", 0, "GET /x -> 200: "), ("c1", 1, "garbled"),
          ("c1", 2, "GET /y -> 201: ok")],
         "conv_id string, turn_idx int, text string")
-    for sp in (False, True):
-        p = parse_grok(df, single_pass=sp)
-        rows = {r.turn_idx: r for r in p.collect()}
-        assert rows[0].error_kind is None and rows[0].msg == "", f"sp={sp}"
-        assert rows[1].error_kind == "malformed" and rows[1].msg is None
-        ok = (p.filter(F.col("error_kind").isNull())
-              .select((reassemble_text(p) == F.col("text")).alias("ok"))
-              .collect())
-        assert all(r.ok for r in ok), f"sp={sp}"
+    p = parse_grok(df)
+    rows = {r.turn_idx: r for r in p.collect()}
+    assert rows[0].error_kind is None and rows[0].msg == ""
+    assert rows[1].error_kind == "malformed" and rows[1].msg is None
+    ok = (p.filter(F.col("error_kind").isNull())
+          .select((reassemble_text(p) == F.col("text")).alias("ok"))
+          .collect())
+    assert ok and all(r.ok for r in ok)
 
 
 def test_image_meta_tolerates_null_and_short_payloads(spark):
@@ -209,14 +209,12 @@ def test_image_meta_tolerates_null_and_short_payloads(spark):
 
 
 def test_router_empty_rules_overflow(spark):
-    from logpipe_spark.operators.router import route, route_single_pass
+    from logpipe_spark.operators.router import route_single_pass
 
     df = spark.createDataFrame(
         [("c1", 0, "user", "x", "bash", None)],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, error_kind string")
-    multi = route(df, [], persist=False)
-    assert multi["overflow"].count() == 1
     single = route_single_pass(df, [])
     assert [r.sink for r in single.collect()] == ["overflow"]
 
