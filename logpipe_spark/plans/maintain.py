@@ -41,18 +41,20 @@ from typing import Sequence
 from pyspark.sql import SparkSession
 
 
-def _append_manifest(log_dir: str, entry: dict) -> str:
+def _append_manifest(log_dir: str, entry: dict) -> None:
+    """Write ``entry`` as the next ``m-<seq>.json``, recording that path
+    as ``entry["manifest_path"]`` first so disk and caller agree."""
     mdir = os.path.join(log_dir, "_maintenance")
     os.makedirs(mdir, exist_ok=True)
     seqs = [int(f[2:-5]) for f in os.listdir(mdir)
             if f.startswith("m-") and f.endswith(".json")]
     seq = (max(seqs) + 1) if seqs else 0
     final = os.path.join(mdir, f"m-{seq}.json")
+    entry["manifest_path"] = final
     tmp = final + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(entry, fh, indent=1, sort_keys=True)
     os.replace(tmp, final)
-    return final
 
 
 def run_maintenance(
@@ -116,7 +118,7 @@ def run_maintenance(
         log = log_dir or next(
             iter([*compact, *expire, *([ivf] if ivf else [])]), None)
         if log is not None:
-            entry["manifest_path"] = _append_manifest(log, entry)
+            _append_manifest(log, entry)
     return entry
 
 

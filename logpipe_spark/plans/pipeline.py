@@ -8,9 +8,9 @@ pruning, folding are free — SURVEY.md §4.1); the explicit engineering left to
 us is partitioning, broadcast, persist-for-fanout, and skew (SURVEY.md §4.2).
 
 Scale design (100 TB / 10^12 turns):
-- input is read with partition-level parallelism and repartitioned by
-  ``hash(conv_id)`` ONCE (`north_rule`): every downstream conv-level
-  aggregate/window then reuses that single exchange;
+- input is read with partition-level parallelism and never repartitioned
+  up front: parse, enrich and route are narrow, and each conv-level
+  aggregate pays its own exchange;
 - the lookup join is broadcast (zero shuffle of the fact table);
 - the routed fan-out persists the enriched frame once and writes every
   sink in one ``partitionBy(sink)`` job;

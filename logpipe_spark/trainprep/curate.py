@@ -938,7 +938,9 @@ def t_closeness(df: DataFrame, quasi_cols: list[str], value,
     bounded; audit cost is then classes x B, not corpus-sized.
 
     Returns ``(quasi_cols..., class_size, n_total, w1, value_range,
-    t)`` — t in [0, 1], NULL for a single-point global support.
+    t)`` — t in [0, 1]. When the global support is a single point,
+    ``wasserstein_from_counts`` has no gap to integrate and drops the
+    class, so such classes are absent from the output, not NULL.
     """
     from logpipe_spark.operators.drift import wasserstein_from_counts
 

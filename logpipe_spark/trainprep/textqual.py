@@ -1098,8 +1098,9 @@ def zipf_slope(docs: DataFrame, key: str = "source",
            - F.col("_sx").cast("double") * F.col("_sy").cast("double"))
     den = (n * F.col("_sxx").cast("double")
            - F.col("_sx").cast("double") * F.col("_sx").cast("double"))
-    # Zipf: rank is x, freq is y in the classic form; we regress
-    # y = log2 freq on x = log2 rank -> slope is the Zipf exponent
+    # regress y = floor(log2 rank) on x = floor(log2 freq): the inverse
+    # of the classic log-freq-on-log-rank fit, so a Zipf exponent s
+    # reads as slope ~ -1/s
     return s.select(
         key, "n_types",
         F.when(den > 0.0,

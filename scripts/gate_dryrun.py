@@ -28,6 +28,9 @@ VALUE_EXEMPT: set[str] = set()
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
+    """Sorted columns, canonical dtypes, sorted rows: the comparator
+    shared with tests/test_oracle_parity.py (each applies its own float
+    rule afterwards)."""
     df = df.reindex(sorted(df.columns), axis=1).copy()
     for c in df.columns:
         if pd.api.types.is_datetime64_any_dtype(df[c]):

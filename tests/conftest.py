@@ -35,3 +35,37 @@ def duck():
         )
     yield con
     con.close()
+
+
+class QueryBuilds:
+    """One build of each driver query per session, shared by the
+    oracle-parity and plan-invariant gates.
+
+    ``build`` calls ``queries()[name](spark, SF_TINY)`` and records the
+    executed plan string at once, before any action runs, so the plan
+    gates see the pre-execution plan (not AQE's final plan). Only the
+    plan string is kept; ``plan`` builds on a cache miss, so either gate
+    file still runs alone.
+    """
+
+    def __init__(self, spark):
+        import __spark_entry__ as entrymod
+
+        self.spark = spark
+        self.queries = entrymod.queries()
+        self.plans: dict[str, str] = {}
+
+    def build(self, name: str):
+        df = self.queries[name](self.spark, SF_TINY)
+        self.plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return df
+
+    def plan(self, name: str) -> str:
+        if name not in self.plans:
+            self.build(name)
+        return self.plans[name]
+
+
+@pytest.fixture(scope="session")
+def query_builds(spark):
+    return QueryBuilds(spark)

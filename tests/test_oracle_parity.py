@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_TINY
+from scripts.gate_dryrun import normalize
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
@@ -22,25 +22,9 @@ ORACLES = entrymod.oracle_sql()
 APPROX_COLS: dict[str, dict[str, float]] = {}
 
 
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1).copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).astype("datetime64[us]")
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif pd.api.types.is_float_dtype(df[c]):
-            df[c] = df[c].astype("float64")
-        elif pd.api.types.is_integer_dtype(df[c]):
-            df[c] = df[c].astype("int64")
-        elif pd.api.types.is_bool_dtype(df[c]):
-            df[c] = df[c].astype(bool)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", sorted(ORACLES.keys()))
-def test_query_matches_oracle(name, spark, duck):
-    sdf = QUERIES[name](spark, SF_TINY).toPandas()
+def test_query_matches_oracle(name, query_builds, duck):
+    sdf = query_builds.build(name).toPandas()
     odf = duck.sql(ORACLES[name]).df()
     assert len(sdf) == len(odf), f"{name}: row count {len(sdf)} != {len(odf)}"
     assert len(sdf) > 0, f"{name}: empty result"
@@ -72,6 +56,19 @@ def test_query_matches_oracle(name, spark, duck):
 def test_every_query_has_callable():
     for name in QUERIES:
         assert callable(QUERIES[name])
+
+
+def test_registry_complete():
+    """Every module-level q_* function is a driver query with an oracle,
+    and the driver window leads queries() in order."""
+    fns = {n[2:]: f for n, f in vars(entrymod).items()
+           if n.startswith("q_") and callable(f)}
+    assert all(QUERIES.get(n) is f for n, f in fns.items())
+    assert len(QUERIES) == len(fns)
+    assert set(QUERIES) == set(ORACLES)
+    window = entrymod.DRIVER_WINDOW
+    assert list(QUERIES)[:50] == list(window)
+    assert len(window) == len(set(window)) == 50
 
 
 def test_entry_smoke(spark):

@@ -37,9 +37,8 @@ MATERIALIZED = {"dedup_incremental", "read_changes", "read_changes_evo",
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
-def test_plan_invariants(name, spark):
-    df = QUERIES[name](spark, SF_TINY)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def test_plan_invariants(name, query_builds):
+    plan = query_builds.plan(name)
     for bad in FORBIDDEN:
         assert bad not in plan, f"{name}: forbidden operator {bad} in plan"
     if name in MATERIALIZED:
@@ -55,13 +54,12 @@ def test_plan_invariants(name, spark):
                                   "topn_with_other", "join_fanout_audit",
                                   "common_neighbors", "bpe_pair_counts",
                                   "phrase_search", "conv_similar_pairs"])
-def test_global_topk_is_take_ordered(name, spark):
+def test_global_topk_is_take_ordered(name, query_builds):
     """The corpus-cardinality top-k queries must compile to a distributed
     TakeOrderedAndProject (per-partition partial top-k), NOT an
     unpartitioned rank window over the full count frame: the only Window
     allowed is the k-row ranking ABOVE the TakeOrderedAndProject."""
-    df = QUERIES[name](spark, SF_TINY)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = query_builds.plan(name)
     assert "TakeOrderedAndProject" in plan, (
         f"{name}: global top-k did not compile to TakeOrderedAndProject")
     take_at = plan.index("TakeOrderedAndProject")
