@@ -3669,7 +3669,7 @@ def q_conformal_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min{r : cum(r) >= target} via the two-level bucketed prefix
     # scan. No per-row rank window at all; shares q_conformal_interval's
     # oracle VERBATIM (merge==scan proof), and is what the streaming
-    # twin (stream_conformal_monitor/read_conformal) reads out.
+    # twin (conformal_partials/read_conformal) reads out.
     from logpipe_spark.operators.aggregate import conformal_from_counts
     from pyspark.sql import Window
 
@@ -4685,8 +4685,8 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts; each lag is a narrow self-join on the shifted integer
     # minute; sufficient stats are exact bigints cast to double BEFORE
     # the cross products, mirroring the oracle's order bit-for-bit.
-    # Shared with the streaming twin (stream_rate_incremental): minute
-    # counts are the mergeable partial, this is its batch readout.
+    # Shared with the streaming twin (rate_counts/read_rate_autocorr):
+    # minute counts are the mergeable partial, this is its batch readout.
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return agg2.autocorr_from_counts(agg2.rate_counts(ev), lags=(1, 2, 3))
 

@@ -124,6 +124,27 @@ def bucketed_cumsum(
                     *[f"_off_{c}" for c in cols])
 
 
+def _two_sample_counts(df: DataFrame, key: str, value: Column,
+                       sample_a: Column) -> DataFrame:
+    """Collapse ``df`` to the (key, v, ca, cb) per-value count state every
+    two-sample statistic reads: ``v`` is ``value`` cast to bigint, ``ca``
+    and ``cb`` count the rows in sample A and sample B.
+
+    Rows whose sample predicate evaluates to NULL belong to NEITHER
+    sample — they are dropped rather than letting when().otherwise(0)
+    silently misfile them into sample B and skew F_B."""
+    vi = value.cast("bigint")
+    return (
+        df.where(vi.isNotNull() & sample_a.isNotNull()
+                 & F.col(key).isNotNull())
+        .groupBy(key, vi.alias("v"))
+        .agg(
+            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
+            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
+        )
+    )
+
+
 def ks_drift(
     df: DataFrame,
     key: str,
@@ -145,19 +166,7 @@ def ks_drift(
     ``bucket_width`` sets the prefix-scan grain in VALUE units: per-key
     summary rows ≈ value_range / bucket_width.
     """
-    vi = value.cast("bigint")
-    # rows whose sample predicate evaluates to NULL belong to NEITHER
-    # sample — drop them rather than letting when().otherwise(0) silently
-    # misfile them into sample B and skew F_B
-    per_v = (
-        df.where(vi.isNotNull() & sample_a.isNotNull()
-                 & F.col(key).isNotNull())
-        .groupBy(key, vi.alias("v"))
-        .agg(
-            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
-            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
-        )
-    )
+    per_v = _two_sample_counts(df, key, value, sample_a)
     return ks_from_counts(per_v, key, bucket_width=bucket_width, min_n=min_n)
 
 
@@ -1075,16 +1084,7 @@ def kuiper_drift(
 
     Returns ``(key, n_a, n_b, d_plus, d_minus, kuiper)``.
     """
-    vi = value.cast("bigint")
-    per_v = (
-        df.where(vi.isNotNull() & sample_a.isNotNull()
-                 & F.col(key).isNotNull())
-        .groupBy(key, vi.alias("v"))
-        .agg(
-            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
-            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
-        )
-    )
+    per_v = _two_sample_counts(df, key, value, sample_a)
     return kuiper_from_counts(per_v, key, bucket_width=bucket_width,
                               min_n=min_n)
 
@@ -1296,16 +1296,7 @@ def hellinger_drift(
     shuffle — within-value order vanishes before any float op), then
     :func:`hellinger_from_counts`. ``value`` should already be bucketed
     to a bounded support (e.g. ``floor(x*100 + 0.5)``)."""
-    vi = value.cast("bigint")
-    per_v = (
-        df.where(vi.isNotNull() & sample_a.isNotNull()
-                 & F.col(key).isNotNull())
-        .groupBy(key, vi.alias("v"))
-        .agg(
-            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
-            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
-        )
-    )
+    per_v = _two_sample_counts(df, key, value, sample_a)
     return hellinger_from_counts(per_v, key, min_n=min_n,
                                  max_support=max_support)
 
@@ -1508,16 +1499,7 @@ def cvm_drift(
     """Two-sample CvM drift per group: one map-side-combinable collapse
     to per (key, distinct value) counts, then :func:`cvm_from_counts`.
     ``value`` should be bucketed to a bounded support per key."""
-    vi = value.cast("bigint")
-    per_v = (
-        df.where(vi.isNotNull() & sample_a.isNotNull()
-                 & F.col(key).isNotNull())
-        .groupBy(key, vi.alias("v"))
-        .agg(
-            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
-            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
-        )
-    )
+    per_v = _two_sample_counts(df, key, value, sample_a)
     return cvm_from_counts(per_v, key, bucket_width=bucket_width,
                            min_n=min_n, max_support=max_support)
 
@@ -1676,16 +1658,7 @@ def wasserstein_drift(
     to per (key, distinct value) counts, then
     :func:`wasserstein_from_counts`. ``value`` keeps full integer
     resolution — no support bucketing needed (order-free sums)."""
-    vi = value.cast("bigint")
-    per_v = (
-        df.where(vi.isNotNull() & sample_a.isNotNull()
-                 & F.col(key).isNotNull())
-        .groupBy(key, vi.alias("v"))
-        .agg(
-            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
-            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
-        )
-    )
+    per_v = _two_sample_counts(df, key, value, sample_a)
     return wasserstein_from_counts(per_v, key, bucket_width=bucket_width,
                                    min_n=min_n)
 
@@ -1748,16 +1721,7 @@ def energy_drift(
 ) -> DataFrame:
     """Two-sample energy-distance drift per group: count collapse then
     :func:`energy_from_counts`. Full integer value resolution."""
-    vi = value.cast("bigint")
-    per_v = (
-        df.where(vi.isNotNull() & sample_a.isNotNull()
-                 & F.col(key).isNotNull())
-        .groupBy(key, vi.alias("v"))
-        .agg(
-            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
-            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
-        )
-    )
+    per_v = _two_sample_counts(df, key, value, sample_a)
     return energy_from_counts(per_v, key, bucket_width=bucket_width,
                               min_n=min_n)
 
@@ -1838,17 +1802,7 @@ def drift_panel(
     wasserstein, energy)``.
     """
     if pre_bucket is None:
-        vi = value.cast("bigint")
-        per_v = (
-            df.where(vi.isNotNull() & sample_a.isNotNull()
-                     & F.col(key).isNotNull())
-            .groupBy(key, vi.alias("v"))
-            .agg(F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint")
-                 .alias("ca"),
-                 F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint")
-                 .alias("cb"))
-            .persist()
-        )
+        per_v = _two_sample_counts(df, key, value, sample_a).persist()
     else:
         vd = value.cast("double")
         rows = (df.where(vd.isNotNull() & sample_a.isNotNull()
@@ -1925,16 +1879,7 @@ def anderson_darling(
     Returns ``(key, n_a, n_b, a2)``.
     """
     d = "decimal(38,0)"
-    vi = value.cast("bigint")
-    per_v = (
-        df.where(vi.isNotNull() & sample_a.isNotNull()
-                 & F.col(key).isNotNull())
-        .groupBy(key, vi.alias("v"))
-        .agg(
-            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
-            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
-        )
-    )
+    per_v = _two_sample_counts(df, key, value, sample_a)
     cums = bucketed_cumsum(
         per_v, key, ["ca", "cb"], bucket_width=bucket_width)
     totals = per_v.groupBy(key).agg(
@@ -1992,16 +1937,7 @@ def shift_function(
 
     Returns ``(key, pct, q_a, q_b, shift)``.
     """
-    vi = value.cast("bigint")
-    per_v = (
-        df.where(vi.isNotNull() & sample_a.isNotNull()
-                 & F.col(key).isNotNull())
-        .groupBy(key, vi.alias("v"))
-        .agg(
-            F.sum(F.when(sample_a, 1).otherwise(0)).cast("bigint").alias("ca"),
-            F.sum(F.when(sample_a, 0).otherwise(1)).cast("bigint").alias("cb"),
-        )
-    )
+    per_v = _two_sample_counts(df, key, value, sample_a)
     cum = bucketed_cumsum(per_v, key, ["ca", "cb"]).select(
         key, "v",
         F.col("cum_ca").alias("_cuma"),

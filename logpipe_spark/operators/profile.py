@@ -284,7 +284,8 @@ def freshness_partials(df: DataFrame, key: str,
     """Per-``key`` (n, first_us, last_us) freshness state — every field
     a monoid (SUM / MIN / MAX), so per-segment partials merge to exactly
     the full-corpus state (the health_partials discipline; streaming
-    twin: ``stream_freshness``/``read_freshness``)."""
+    twin: this partial through ``stream_epochs``, then
+    ``read_freshness``)."""
     tsu = F.unix_micros(F.col(ts_col).cast("timestamp"))
     return (df.where(F.col(key).isNotNull() & F.col(ts_col).isNotNull())
             .groupBy(key).agg(

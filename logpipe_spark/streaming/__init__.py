@@ -5,7 +5,9 @@ genuinely streaming behaviors — periodic partial aggregate flush
 (``aggregateTransformer.js:92-96``) and checkpoint/resume — map to
 Structured Streaming update-mode aggregation and the streaming checkpoint
 location. This package provides the unbounded-input variant of the
-parse→enrich→route→aggregate pipeline.
+parse→enrich→route→aggregate pipeline; incremental monitors are a partial
+function plus its ``read_*`` reader, written per micro-batch by
+``stream_epochs``.
 """
 
 from logpipe_spark.streaming.stream import (  # noqa: F401
@@ -14,9 +16,9 @@ from logpipe_spark.streaming.stream import (  # noqa: F401
     stream_interval_join,
     stream_asof_enrich,
     stream_kmv_distinct,
-    stream_rollup_incremental,
+    token_rollup_partials,
     read_rollup,
-    stream_drift_monitor,
+    drift_partials,
     read_cvm,
     read_drift,
     read_energy,
@@ -26,34 +28,30 @@ from logpipe_spark.streaming.stream import (  # noqa: F401
     read_wasserstein,
     stream_apdex,
     apdex_report,
-    stream_cms_incremental,
     read_cms,
     stream_dedup_incremental,
     read_dedup_pairs,
-    stream_postings_incremental,
+    postings_partials,
     read_stream_postings,
     stream_context_overflow,
-    stream_quantile_incremental,
+    token_quantile_partials,
     read_quantiles,
-    stream_rate_incremental,
     read_rate_autocorr,
     health_partials,
     health_report,
-    stream_partition_health,
     read_partition_health,
     golden_partials,
     golden_report,
-    stream_golden_record,
     read_golden_record,
-    stream_slo_incremental,
-    stream_freshness,
+    slo_partials,
     read_freshness,
-    stream_growth_accounting,
+    growth_partials,
     read_growth_accounting,
-    stream_conformal_monitor,
+    conformal_partials,
     read_conformal,
     read_slo_burn,
     run_stream_once,
+    stream_epochs,
     stream_route_fanout,
     stream_transcripts,
     windowed_turn_counts,

@@ -22,6 +22,13 @@ streaming-only concerns live here:
   ``base/epoch=<id>/sink=<name>/`` directory; a batch replayed after a
   crash rewrites its epoch instead of adding a second copy, so replay is
   idempotent.
+- **epoch partials** (:func:`stream_epochs`) — the one writer behind
+  every incremental monitor: each micro-batch's mergeable partial frame
+  overwrites ``state_dir/epoch=<id>``. Monitors are pairs of a partial
+  function (``health_partials``, ``drift_partials``, ...) and a
+  ``read_*`` reader that merges all epochs; the partial is the same
+  function a batch run applies to the whole corpus, so the readout
+  equals the batch answer.
 
 Scale: state is hash-partitioned by group key across executors; watermark
 eviction bounds it; ``spark.sql.shuffle.partitions`` sizes the state-store
@@ -30,7 +37,7 @@ count (set it before first start — it is fixed by the checkpoint).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -42,16 +49,6 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType,
                                TimestampType)
 
 from logpipe_spark.schemas import TRANSCRIPT_SCHEMA
-
-# Parallelism bound for per-epoch state writes (r04 verdict item 3): a
-# coalesce(1) funnels every epoch's partial frame through ONE write
-# task — fine for group-cardinality partials, but a key-rich partial
-# (stream_postings_incremental's vocab-sized frame) serializes its
-# write. coalesce(EPOCH_WRITE_PARTITIONS) bounds the file count per
-# epoch (empty tasks emit no file, so tiny partials still produce one
-# or two files) while letting a wide partial write in parallel; every
-# epoch reader already merges partials, so multi-file epochs are free.
-EPOCH_WRITE_PARTITIONS = 8
 
 SESSION_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -214,6 +211,33 @@ def stream_route_fanout(spark: SparkSession, stream: DataFrame,
     )
 
 
+def stream_epochs(stream: DataFrame,
+                  partials: Callable[[DataFrame], DataFrame],
+                  state_dir: str, checkpoint_dir: str):
+    """foreachBatch epoch-partials writer: each micro-batch writes
+    ``partials(batch)`` to ``{state_dir}/epoch=<id>``; a ``read_*``
+    reader merges every epoch with the partial's monoid.
+
+    Exactly-once by construction: the write is ``mode("overwrite")`` into
+    the epoch's own directory, so a batch the checkpoint replays (crash
+    between the write and the commit) rewrites its partial instead of
+    double-counting it. No coalesce: every partial ends in a shuffle
+    (groupBy, distinct or a window over its key), so AQE sizes the epoch's
+    files from the partial's bytes — one file for a small partial, a
+    parallel write for a wide one. Returns the (not-yet-started)
+    DataStreamWriter so callers pick the trigger.
+    """
+
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        (partials(batch_df).write.mode("overwrite")
+         .parquet(f"{state_dir}/epoch={epoch_id}"))
+
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+
+
 def run_stream_once(writer, timeout_s: int = 120) -> None:
     """Drain all available input (availableNow) and stop — the test/bench
     entry point; production uses a continuous trigger instead. Raises if
@@ -331,36 +355,16 @@ def stream_interval_join(
     return l.join(r, cond, "inner").drop(r[on])
 
 
-def stream_rollup_incremental(spark: SparkSession, src: str, state_dir: str,
-                              checkpoint_dir: str, fine: str = "minute",
-                              max_files_per_trigger: int | None = None):
-    """Streaming continuous aggregate: each micro-batch writes its FINE-grain
-    mergeable partials (aggregate.rollup_partials) to an epoch-keyed
-    directory; :func:`read_rollup` re-merges them to any coarser grain.
-
-    Exactly-once by construction: the batch writes ``mode("overwrite")``
-    into ``{state_dir}/epoch=<id>``, so a replayed epoch (crash between
-    sink write and checkpoint commit) overwrites its own partials instead
-    of double-counting — the same idempotent-per-epoch pattern as the
-    fan-out sink. State per epoch is one row per (fine bucket, tool) —
-    the hypertable ingest path: raw turns are never re-read to serve a
-    coarser rollup.
-    """
+def token_rollup_partials(df: DataFrame, fine: str = "minute") -> DataFrame:
+    """FINE-grain mergeable rollup partials (aggregate.rollup_partials) of
+    per-turn token counts, one row per (fine bucket, tool); :func:`read_rollup`
+    re-merges them to any coarser grain — the hypertable ingest path: raw
+    turns are never re-read to serve a coarser rollup."""
     from logpipe_spark.functions.textfn import token_count
     from logpipe_spark.operators.aggregate import rollup_partials
 
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        partials = rollup_partials(
-            df.withColumn("_v", token_count(F.col("text"))),
-            "ts", ["tool"], "_v", fine)
-        (partials.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
+    return rollup_partials(df.withColumn("_v", token_count(F.col("text"))),
+                           "ts", ["tool"], "_v", fine)
 
 
 def read_rollup(spark: SparkSession, state_dir: str,
@@ -461,33 +465,10 @@ def stream_asof_enrich(left: DataFrame, right: DataFrame,
     )
 
 
-def stream_cms_incremental(spark: SparkSession, src: str, state_dir: str,
-                           checkpoint_dir: str, key: str = "conv_id",
-                           depth: int = 3, width: int = 1024,
-                           hash_fn: str = "xxhash64",
-                           max_files_per_trigger: int | None = None):
-    """Streaming count-min sketch: each micro-batch writes its own
-    ``depth x width`` counter grid to ``{state_dir}/epoch=<id>`` (overwrite
-    → idempotent on replay, same pattern as ``stream_rollup_incremental``);
-    :func:`read_cms` merges epochs by summing counters. CMS counters are
-    linear, so the union of per-batch sketches IS the sketch of the union —
-    the streaming form costs nothing beyond the batch operator."""
-    from logpipe_spark.operators.skew import cms_sketch
-
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (cms_sketch(df, key, depth=depth, width=width, hash_fn=hash_fn)
-         .coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
-
-
 def read_cms(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Merge all epochs' sketches: sum counters per (seed, bucket).
+    """Merge all epochs' ``skew.cms_sketch`` grids: sum counters per (seed,
+    bucket). CMS counters are linear, so the union of per-batch sketches
+    IS the sketch of the union.
 
     Adding counters is only meaningful when every epoch hashed with the
     SAME function, so the merge asserts the persisted ``hash_fn`` stamps
@@ -513,44 +494,26 @@ def read_cms(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
-def stream_drift_monitor(spark: SparkSession, src: str, state_dir: str,
-                         checkpoint_dir: str,
-                         max_files_per_trigger: int | None = None):
-    """Streaming distribution-drift monitor: each micro-batch writes its
-    per-(tool, token-count) COUNTS — the KS statistic's mergeable
-    partial — to an epoch-keyed directory; :func:`read_drift` merges all
-    epochs and scores the accumulated stream distribution against a
-    static reference with :func:`~logpipe_spark.operators.drift.
-    ks_from_counts`.
-
-    Same exactly-once-by-construction shape as
-    :func:`stream_rollup_incremental`: ``mode("overwrite")`` into
-    ``{state_dir}/epoch=<id>`` makes a replayed epoch idempotent. State
-    per epoch is one row per (tool, distinct value) — the raw stream is
-    never re-read to re-score drift as data accumulates.
-    """
+def drift_partials(df: DataFrame) -> DataFrame:
+    """Per-(tool, token-count) COUNTS ``(tool, v, c)`` — the mergeable
+    partial every drift readout below scores against a static reference
+    (KS via :func:`~logpipe_spark.operators.drift.ks_from_counts`, and
+    Kuiper, Hellinger, CvM, W1, energy, L-moments). State is one row per
+    (tool, distinct value); the raw stream is never re-read to re-score
+    drift as data accumulates."""
     from logpipe_spark.functions.textfn import token_count
 
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        counts = (
-            df.select("tool", token_count(F.col("text")).alias("v"))
-            .where(F.col("v").isNotNull())
-            .groupBy("tool", "v")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        )
-        (counts.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
+    return (
+        df.select("tool", token_count(F.col("text")).alias("v"))
+        .where(F.col("v").isNotNull())
+        .groupBy("tool", "v")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
 
 
 def _merged_drift_counts(spark: SparkSession, state_dir: str,
                          reference: DataFrame) -> DataFrame:
-    """Merge the drift-monitor state dir with a static (tool, v, c)
+    """Merge the :func:`drift_partials` state dir with a static (tool, v, c)
     reference into the pooled (tool, v, ca, cb) support frame every
     *_from_counts statistic expects: stream = sample A, reference =
     sample B; values only one side saw carry a zero count on the other
@@ -586,8 +549,8 @@ def read_drift(spark: SparkSession, state_dir: str,
 
 def read_kuiper(spark: SparkSession, state_dir: str,
                 reference: DataFrame, bucket_width: int = 1024) -> DataFrame:
-    """Kuiper V readout over the SAME accumulated drift state
-    :func:`stream_drift_monitor` writes — counts are statistic-agnostic
+    """Kuiper V readout over the SAME accumulated
+    :func:`drift_partials` state — counts are statistic-agnostic
     mergeable partials, so one state dir serves KS, Kuiper, Hellinger
     and CvM with zero extra stream passes. Returns
     (tool, n_a, n_b, d_plus, d_minus, kuiper)."""
@@ -795,7 +758,7 @@ def stream_dedup_incremental(spark: SparkSession, src: str, state_dir: str,
         {state_dir}/docs/epoch=<id>    raw docs (verify-side point reads)
 
     Exactly-once by construction (same idempotent-epoch pattern as
-    ``stream_rollup_incremental``): every write is ``overwrite`` into the
+    :func:`stream_epochs`): every write is ``overwrite`` into the
     epoch's own directory, and the probe EXCLUDES the current epoch's
     partitions, so a replayed batch reproduces — not duplicates — its
     pairs and index delta. Each unordered pair is emitted exactly once:
@@ -866,14 +829,14 @@ def stream_dedup_incremental(spark: SparkSession, src: str, state_dir: str,
         pairs = jaccard_on_pairs(cand, sh_all).where(
             F.col("jaccard") >= threshold)
 
-        (pairs.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
+        (pairs.write.mode("overwrite")
          .parquet(f"{state_dir}/pairs/epoch={epoch_id}"))
         (bands_new.withColumn(
             "_bucket", F.pmod(F.hash(F.col("band_hash")), F.lit(n_buckets)))
          .repartition(min(n_buckets, 8), "_bucket")
          .write.partitionBy("_bucket").mode("overwrite")
          .parquet(f"{state_dir}/bands/epoch={epoch_id}"))
-        (docs.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
+        (docs.write.mode("overwrite")
          .parquet(f"{state_dir}/docs/epoch={epoch_id}"))
 
     return (stream.writeStream.foreachBatch(write_batch)
@@ -887,35 +850,19 @@ def read_dedup_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", "jaccard"))
 
 
-def stream_quantile_incremental(spark: SparkSession, src: str,
-                                state_dir: str, checkpoint_dir: str,
-                                key: str = "tool", value_expr: str = None,
-                                k: int = 128,
-                                max_files_per_trigger: int | None = None):
-    """Streaming quantile monitoring: each micro-batch writes its own
-    bottom-k-by-md5 sample sketch (``aggregate.quantile_sketch``) to
-    ``{state_dir}/epoch=<id>`` (overwrite → idempotent on replay);
-    :func:`read_quantiles` re-merges the epochs (bottom-k is a monoid —
-    and idempotent, so replayed rows collapse) and estimates. The
-    streaming state per epoch is k rows per group, and the readout is
-    IDENTICAL to the batch sketch of everything ingested — asserted in
-    tests, the same epoch-partials pattern as CMS/rollup/drift."""
+def token_quantile_partials(df: DataFrame, key: str = "tool",
+                            k: int = 128) -> DataFrame:
+    """Bottom-k-by-md5 sample sketch (``aggregate.quantile_sketch``) of
+    per-turn token counts, ids ``conv_id:turn_idx``: k rows per group.
+    Bottom-k is a monoid — and idempotent, so replayed rows collapse — so
+    :func:`read_quantiles` over epochs of it is IDENTICAL to the batch
+    sketch of everything ingested."""
     from logpipe_spark.functions.textfn import token_count
     from logpipe_spark.operators.aggregate import quantile_sketch
 
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        v = df.withColumn("_v", F.expr(value_expr) if value_expr
-                          else token_count(F.col("text")).cast("double"))
-        v = v.withColumn("_id", F.concat_ws(":", "conv_id", "turn_idx"))
-        sk = quantile_sketch(v, key, "_v", "_id", k=k)
-        (sk.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
+    v = (df.withColumn("_v", token_count(F.col("text")).cast("double"))
+         .withColumn("_id", F.concat_ws(":", "conv_id", "turn_idx")))
+    return quantile_sketch(v, key, "_v", "_id", k=k)
 
 
 def read_quantiles(spark: SparkSession, state_dir: str, key: str = "tool",
@@ -929,35 +876,21 @@ def read_quantiles(spark: SparkSession, state_dir: str, key: str = "tool",
     return quantile_sketch_estimate(merged, key, ps=ps)
 
 
-def stream_slo_incremental(spark: SparkSession, src: str, state_dir: str,
-                           checkpoint_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """Streaming burn-rate state: each micro-batch writes its minute-grain
-    (bucket_epoch, n, err) partials — parsed clean rows, errors =
-    status >= 500 — to ``{state_dir}/epoch=<id>`` (overwrite →
-    idempotent). Counts are mergeable, so :func:`read_slo_burn` re-sums
-    epochs and applies the same RANGE-frame burn windows as the batch
-    operator; readout == ``aggregate.slo_burn`` over everything ingested
-    (parity test at two pacings)."""
+def slo_partials(df: DataFrame) -> DataFrame:
+    """Minute-grain burn-rate partials ``(bucket_epoch, n, err)`` over
+    parsed clean rows, errors = status >= 500. Counts are mergeable, so
+    :func:`read_slo_burn` re-sums epochs and applies the same RANGE-frame
+    burn windows as the batch operator; readout == ``aggregate.slo_burn``
+    over everything ingested."""
     from logpipe_spark.operators.parse import parse_grok
 
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        p = parse_grok(df)
-        clean = p.where(F.col("error_kind").isNull())
-        bkt = (F.col("ts").cast("timestamp").cast("long") / 60) \
-            .cast("long") * 60
-        pm = (clean.select(bkt.alias("bucket_epoch"),
-                           (F.col("status") >= 500).cast("int").alias("_e"))
-              .groupBy("bucket_epoch")
-              .agg(F.count(F.lit(1)).alias("n"), F.sum("_e").alias("err")))
-        (pm.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
+    clean = parse_grok(df).where(F.col("error_kind").isNull())
+    bkt = (F.col("ts").cast("timestamp").cast("long") / 60) \
+        .cast("long") * 60
+    return (clean.select(bkt.alias("bucket_epoch"),
+                         (F.col("status") >= 500).cast("int").alias("_e"))
+            .groupBy("bucket_epoch")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("_e").alias("err")))
 
 
 def read_slo_burn(spark: SparkSession, state_dir: str,
@@ -1094,38 +1027,16 @@ def stream_context_overflow(stream: DataFrame, budget: int = 256,
 
 # --- streaming incremental postings ------------------------------------------
 
-def stream_postings_incremental(spark: SparkSession, src: str,
-                                state_dir: str, checkpoint_dir: str,
-                                max_postings: int = 10,
-                                max_files_per_trigger: int | None = None):
-    """Streaming ingest-time inverted-index maintenance: the foreachBatch
-    twin of ``trainprep.index.append_postings_index``. Each micro-batch
-    of NEW documents (schema ``doc_id long, text string``) writes its
-    own mergeable partial — (word, df, capped ascending post_ids) — into
-    ``{state_dir}/epoch=<id>``; :func:`read_stream_postings` folds all
-    epochs with the same monoid (df adds across disjoint shards; the k
-    smallest of a union live in the union of each side's k smallest).
-
-    Exactly-once by construction: each epoch overwrites its OWN
-    directory, so a replayed batch reproduces — not double-counts — its
-    partial (the stream_rollup_incremental idempotent-epoch pattern).
-    Batch parity (== whole-corpus ``build_postings``) is asserted in
-    tests at two pacings.
-    """
+def postings_partials(df: DataFrame, max_postings: int = 10) -> DataFrame:
+    """Ingest-time inverted-index partial over NEW documents (schema
+    ``doc_id long, text string``): (word, df, capped ascending post_ids),
+    the mergeable state of ``trainprep.index.append_postings_index``.
+    :func:`read_stream_postings` folds epochs with the same monoid (df
+    adds across disjoint shards; the k smallest of a union live in the
+    union of each side's k smallest)."""
     from logpipe_spark.trainprep.index import _postings_partial
 
-    stream = (spark.readStream
-              .schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", max_files_per_trigger or 1000)
-              .parquet(src))
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        part = _postings_partial(df, "text", "doc_id", max_postings)
-        (part.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
+    return _postings_partial(df, "text", "doc_id", max_postings)
 
 
 def read_stream_postings(spark: SparkSession, state_dir: str,
@@ -1148,35 +1059,10 @@ def read_stream_postings(spark: SparkSession, state_dir: str,
     )
 
 
-def stream_rate_incremental(spark: SparkSession, src: str, state_dir: str,
-                            checkpoint_dir: str,
-                            bucket_seconds: int = 60,
-                            max_files_per_trigger: int | None = None):
-    """Streaming arrival-rate partials: each micro-batch writes ITS OWN
-    per-bucket turn counts (``aggregate.rate_counts``) to
-    ``{state_dir}/epoch=<id>`` (overwrite → idempotent on replay).
-    Bucket counts are the canonical mergeable monoid — SUM of the epoch
-    partials == the count of everything ingested — so
-    :func:`read_rate_autocorr`'s readout is IDENTICAL to the batch
-    ``autocorr`` query over the full corpus (asserted at two pacings in
-    tests, the same epoch-partials pattern as CMS/rollup/drift/SLO)."""
-    from logpipe_spark.operators.aggregate import rate_counts
-
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        c = rate_counts(df, ts_col="ts", bucket_seconds=bucket_seconds)
-        (c.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
-
-
 def read_rate_autocorr(spark: SparkSession, state_dir: str,
                        lags=(1, 2, 3)) -> DataFrame:
-    """Merge every epoch's bucket counts (SUM — the monoid op) and run
+    """Merge every epoch's ``aggregate.rate_counts`` buckets (SUM — the
+    monoid op, so the merge == the count of everything ingested) and run
     the lag-correlation readout on the merged series."""
     from logpipe_spark.operators.aggregate import autocorr_from_counts
 
@@ -1217,27 +1103,6 @@ def health_report(partials: DataFrame) -> DataFrame:
         F.countDistinct("conv_id").cast("bigint").alias("n_convs"),
         F.sum("n_chars").cast("bigint").alias("n_chars"),
     )
-
-
-def stream_partition_health(spark: SparkSession, src: str, state_dir: str,
-                            checkpoint_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """Streaming feed-health monitor: each micro-batch writes ITS OWN
-    (day, conv) health partials to ``{state_dir}/epoch=<id>`` (overwrite
-    → idempotent on replay). All counts are SUM-monoids and the distinct
-    key survives to the readout, so :func:`read_partition_health` is
-    IDENTICAL to the batch ``health_report(health_partials(corpus))``
-    (asserted at two pacings in tests — the same epoch-partials pattern
-    as CMS/rollup/drift/rate/SLO)."""
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (health_partials(df).coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
 
 
 def read_partition_health(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1285,26 +1150,6 @@ def golden_report(partials: DataFrame) -> DataFrame:
         "conv_id", "n_turns", "first_ts", "last_ts", "n_roles",
         F.col("_lt.tool").alias("latest_tool"),
         F.col("_lt.ts").alias("latest_tool_ts"))
-
-
-def stream_golden_record(spark: SparkSession, src: str, state_dir: str,
-                         checkpoint_dir: str,
-                         max_files_per_trigger: int | None = None):
-    """Streaming MDM survivorship: each micro-batch writes ITS OWN
-    (conv, role) golden partials to ``{state_dir}/epoch=<id>``
-    (overwrite → idempotent on replay). Every field is a monoid, so
-    :func:`read_golden_record`'s readout is IDENTICAL to the batch
-    ``golden_report(golden_partials(corpus))`` (two-pacing parity in
-    tests — the same epoch-partials pattern as the other twins)."""
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (golden_partials(df).coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
 
 
 def read_golden_record(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1433,32 +1278,9 @@ def apdex_report(partials: DataFrame) -> DataFrame:
          / (2 * F.col("n_turns")).cast("double")).alias("apdex"))
 
 
-def stream_freshness(spark: SparkSession, src: str, state_dir: str,
-                     checkpoint_dir: str, key: str = "role",
-                     max_files_per_trigger: int | None = None):
-    """Streaming data-freshness monitor: each micro-batch writes ITS OWN
-    per-``key`` (n, first_us, last_us) partials to
-    ``{state_dir}/epoch=<id>`` (overwrite → idempotent on replay).
-    Every field is a monoid (SUM / MIN / MAX), so
-    :func:`read_freshness` is IDENTICAL to the batch
-    ``freshness_lag`` over the whole corpus (two-pacing parity in
-    tests — the health/golden epoch-partials pattern)."""
-    from logpipe_spark.operators.profile import freshness_partials
-
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (freshness_partials(df, key).coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
-
-
 def read_freshness(spark: SparkSession, state_dir: str,
                    key: str = "role") -> DataFrame:
-    """Merge every epoch's freshness partials (SUM/MIN/MAX — the monoid
+    """Merge every epoch's ``profile.freshness_partials`` (SUM/MIN/MAX — the monoid
     op) and fold to the staleness scorecard == batch freshness_lag."""
     from logpipe_spark.operators.profile import freshness_report
 
@@ -1470,30 +1292,16 @@ def read_freshness(spark: SparkSession, state_dir: str,
     return freshness_report(merged, key)
 
 
-def stream_growth_accounting(spark: SparkSession, src: str,
-                             state_dir: str, checkpoint_dir: str,
-                             max_files_per_trigger: int | None = None):
-    """Streaming growth accounting: each micro-batch writes ITS OWN
-    distinct (conv, week) activity pairs to ``{state_dir}/epoch=<id>``
-    (overwrite → idempotent). The distinct-pair SET is the mergeable
-    state (union-distinct is the monoid, the dedup-pairs discipline);
-    :func:`read_growth_accounting` merges and runs the batch fold, so
-    the readout is IDENTICAL to batch ``growth_accounting`` over the
-    whole corpus (two-pacing parity in tests)."""
-    stream = stream_transcripts(spark, src,
-                                max_files_per_trigger=max_files_per_trigger)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (df.where(F.col("conv_id").isNotNull() & F.col("ts").isNotNull())
-         .select("conv_id",
-                 F.expr("unix_micros(cast(ts AS timestamp)) "
-                        "div 604800000000").cast("bigint").alias("week"))
-         .distinct()
-         .coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
+def growth_partials(df: DataFrame) -> DataFrame:
+    """Distinct (conv_id, week) activity pairs. The pair SET is the
+    mergeable state (union-distinct is the monoid, the dedup-pairs
+    discipline), so :func:`read_growth_accounting` is IDENTICAL to batch
+    ``growth_accounting`` over the whole corpus."""
+    return (df.where(F.col("conv_id").isNotNull() & F.col("ts").isNotNull())
+            .select("conv_id",
+                    F.expr("unix_micros(cast(ts AS timestamp)) "
+                           "div 604800000000").cast("bigint").alias("week"))
+            .distinct())
 
 
 def read_growth_accounting(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1505,45 +1313,21 @@ def read_growth_accounting(spark: SparkSession, state_dir: str) -> DataFrame:
     return growth_accounting(pairs, "conv_id", "week")
 
 
-def stream_conformal_monitor(spark: SparkSession, src: str,
-                             state_dir: str, checkpoint_dir: str,
-                             key_col: str = "g", y_col: str = "y",
-                             yhat_col: str = "yh",
-                             max_files_per_trigger: int | None = None):
-    """Streaming conformal-calibration monitor: the source carries
-    logged (key, outcome, prediction) rows; each micro-batch writes its
-    per-(key, |residual|) COUNTS — a lossless sufficient statistic for
-    every rank, hence for the split-conformal radius — to an
-    epoch-keyed directory. :func:`read_conformal` merges all epochs and
-    selects the radius with ``conformal_from_counts``, so the coverage
-    band of the ACCUMULATED stream is always readable without
-    re-scanning rows (the drift-monitor pattern applied to
-    uncertainty).
-
-    Exactly-once by construction: ``mode("overwrite")`` into
-    ``{state_dir}/epoch=<id>`` makes a replayed epoch idempotent.
-    """
-    stream = (spark.readStream
-              .schema(f"{key_col} string, {y_col} long, {yhat_col} long")
-              .option("maxFilesPerTrigger", max_files_per_trigger or 1000)
-              .parquet(src))
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        counts = (
-            df.where(F.col(key_col).isNotNull()
-                     & F.col(y_col).isNotNull()
-                     & F.col(yhat_col).isNotNull())
-            .select(F.col(key_col).alias("g"),
-                    F.abs(F.col(y_col).cast("bigint")
-                          - F.col(yhat_col).cast("bigint")).alias("r"))
-            .groupBy("g", "r")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        )
-        (counts.coalesce(EPOCH_WRITE_PARTITIONS).write.mode("overwrite")
-         .parquet(f"{state_dir}/epoch={epoch_id}"))
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir))
+def conformal_partials(df: DataFrame) -> DataFrame:
+    """Per-(group, |residual|) COUNTS ``(g, r, c)`` over logged
+    ``(g string, y long, yh long)`` rows — a lossless sufficient statistic
+    for every rank, hence for the split-conformal radius, so
+    :func:`read_conformal` reads the coverage band of the ACCUMULATED
+    stream without re-scanning rows (the drift-partials pattern applied
+    to uncertainty)."""
+    return (
+        df.where(F.col("g").isNotNull() & F.col("y").isNotNull()
+                 & F.col("yh").isNotNull())
+        .select("g", F.abs(F.col("y").cast("bigint")
+                           - F.col("yh").cast("bigint")).alias("r"))
+        .groupBy("g", "r")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
 
 
 def read_conformal(spark: SparkSession, state_dir: str,

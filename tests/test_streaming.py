@@ -7,9 +7,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from logpipe_spark.streaming import (conversation_sessions, run_stream_once,
-                                     stream_route_fanout, stream_transcripts,
-                                     windowed_turn_counts)
+                                     stream_epochs, stream_route_fanout,
+                                     stream_transcripts, windowed_turn_counts)
 from logpipe_spark.synth import synth_transcripts
+
+
+def _file_stream(spark, schema, src, mft=None):
+    """Parquet file source with a non-transcript schema, ``mft`` files per
+    trigger (None: everything available in one batch)."""
+    reader = spark.readStream.schema(schema)
+    if mft:
+        reader = reader.option("maxFilesPerTrigger", mft)
+    return reader.parquet(src)
 
 
 @pytest.fixture(scope="module")
@@ -17,6 +26,16 @@ def stream_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("stream_src"))
     synth_transcripts(spark, n_turns=3000, n_convs=60,
                       error_every=25).write.mode("overwrite").parquet(d)
+    return d
+
+
+@pytest.fixture(scope="module")
+def paced_dir(spark, tmp_path_factory):
+    """Four-file transcript source: a drain at one file per trigger runs
+    four epochs."""
+    d = str(tmp_path_factory.mktemp("paced_src"))
+    (synth_transcripts(spark, n_turns=2000, n_convs=20, error_every=25)
+     .repartition(4).write.mode("overwrite").parquet(d))
     return d
 
 
@@ -292,12 +311,12 @@ def test_stream_rollup_incremental_equals_batch(spark, stream_dir, tmp_path):
     including fine buckets split across micro-batches."""
     from logpipe_spark.functions.textfn import token_count
     from logpipe_spark.operators.aggregate import time_rollup
-    from logpipe_spark.streaming import read_rollup, stream_rollup_incremental
+    from logpipe_spark.streaming import read_rollup, token_rollup_partials
 
     state = str(tmp_path / "rollup_state")
-    writer = stream_rollup_incremental(
-        spark, stream_dir, state, str(tmp_path / "ckr"),
-        max_files_per_trigger=1)
+    writer = stream_epochs(
+        stream_transcripts(spark, stream_dir, max_files_per_trigger=1),
+        token_rollup_partials, state, str(tmp_path / "ckr"))
     run_stream_once(writer)
 
     got = read_rollup(spark, state, "hour").drop("epoch").toPandas()
@@ -374,12 +393,13 @@ def test_stream_cms_equals_batch_sketch(spark, stream_dir, tmp_path):
     the batch sketch of the whole corpus — so heavy-hitter estimates from
     the streamed sketch match the batch estimates exactly."""
     from logpipe_spark.operators.skew import cms_estimate, cms_sketch
-    from logpipe_spark.streaming import read_cms, stream_cms_incremental
+    from logpipe_spark.streaming import read_cms
 
     state = str(tmp_path / "cms_state")
-    writer = stream_cms_incremental(
-        spark, stream_dir, state, str(tmp_path / "ckc"),
-        width=256, max_files_per_trigger=1)
+    writer = stream_epochs(
+        stream_transcripts(spark, stream_dir, max_files_per_trigger=1),
+        lambda df: cms_sketch(df, "conv_id", width=256), state,
+        str(tmp_path / "ckc"))
     run_stream_once(writer)
 
     merged = read_cms(spark, state).select("seed", "bucket", "n")
@@ -403,12 +423,12 @@ def test_stream_drift_monitor_merges_and_scores(spark, stream_dir, tmp_path):
     against its OWN batch distribution gives ks = 0 for every tool;
     (3) against a shifted reference, ks = 1 (disjoint supports)."""
     from logpipe_spark.functions.textfn import token_count
-    from logpipe_spark.streaming import read_drift, stream_drift_monitor
+    from logpipe_spark.streaming import drift_partials, read_drift
 
     state = str(tmp_path / "drift_state")
-    writer = stream_drift_monitor(
-        spark, stream_dir, state, str(tmp_path / "ckd"),
-        max_files_per_trigger=1)
+    writer = stream_epochs(
+        stream_transcripts(spark, stream_dir, max_files_per_trigger=1),
+        drift_partials, state, str(tmp_path / "ckd"))
     run_stream_once(writer)
 
     batch_counts = (
@@ -687,12 +707,13 @@ def test_stream_quantiles_equal_batch_sketch(spark, stream_dir, tmp_path):
     from logpipe_spark.operators.aggregate import (quantile_sketch,
                                                    quantile_sketch_estimate)
     from logpipe_spark.streaming import (read_quantiles,
-                                         stream_quantile_incremental)
+                                         token_quantile_partials)
 
     state = str(tmp_path / "q_state")
-    writer = stream_quantile_incremental(
-        spark, stream_dir, state, str(tmp_path / "ckq"),
-        k=32, max_files_per_trigger=1)
+    writer = stream_epochs(
+        stream_transcripts(spark, stream_dir, max_files_per_trigger=1),
+        lambda df: token_quantile_partials(df, k=32), state,
+        str(tmp_path / "ckq"))
     run_stream_once(writer)
 
     got = {r.tool: (r.p50, r.p90, r.p99, r.n_sample)
@@ -711,12 +732,12 @@ def test_stream_slo_burn_equals_batch(spark, stream_dir, tmp_path):
     the full stream (counts are mergeable; windows applied at read)."""
     from logpipe_spark.operators.aggregate import slo_burn
     from logpipe_spark.operators.parse import parse_grok
-    from logpipe_spark.streaming import read_slo_burn, stream_slo_incremental
+    from logpipe_spark.streaming import read_slo_burn, slo_partials
 
     state = str(tmp_path / "slo_state")
-    writer = stream_slo_incremental(
-        spark, stream_dir, state, str(tmp_path / "cks"),
-        max_files_per_trigger=1)
+    writer = stream_epochs(
+        stream_transcripts(spark, stream_dir, max_files_per_trigger=1),
+        slo_partials, state, str(tmp_path / "cks"))
     run_stream_once(writer)
 
     got = sorted(map(tuple, read_slo_burn(spark, state).collect()))
@@ -787,8 +808,7 @@ def test_stream_postings_equals_batch_build(spark, tmp_path):
     """Per-epoch postings partials folded by the capped-list monoid ==
     whole-corpus build_postings, at two pacings; an interleaved-id split
     forces the merged caps to interleave across epochs."""
-    from logpipe_spark.streaming.stream import (read_stream_postings,
-                                                stream_postings_incremental)
+    from logpipe_spark.streaming import postings_partials, read_stream_postings
     from logpipe_spark.trainprep.index import build_postings
 
     rows = [(i, "alpha beta w%d" % (i % 3)) for i in range(18)]
@@ -805,9 +825,10 @@ def test_stream_postings_equals_batch_build(spark, tmp_path):
 
     for mft, tag in ((1, "paced"), (None, "oneshot")):
         state = str(tmp_path / f"pstate_{tag}")
-        writer = stream_postings_incremental(
-            spark, src, state, str(tmp_path / f"pck_{tag}"),
-            max_postings=4, max_files_per_trigger=mft)
+        writer = stream_epochs(
+            _file_stream(spark, "doc_id long, text string", src, mft),
+            lambda df: postings_partials(df, max_postings=4), state,
+            str(tmp_path / f"pck_{tag}"))
         run_stream_once(writer)
         got = {(r.word, r.df, r.postings)
                for r in read_stream_postings(spark, state,
@@ -822,8 +843,7 @@ def test_stream_rate_autocorr_equals_batch(spark, stream_dir, tmp_path):
     integer sufficient stats) at both pacings."""
     from logpipe_spark.operators.aggregate import (autocorr_from_counts,
                                                    rate_counts)
-    from logpipe_spark.streaming import (read_rate_autocorr,
-                                         stream_rate_incremental)
+    from logpipe_spark.streaming import read_rate_autocorr
 
     batch = spark.read.parquet(stream_dir)
     want = sorted(map(tuple, autocorr_from_counts(
@@ -832,9 +852,10 @@ def test_stream_rate_autocorr_equals_batch(spark, stream_dir, tmp_path):
 
     for mft, tag in ((1, "paced"), (None, "oneshot")):
         state = str(tmp_path / f"rate_state_{tag}")
-        writer = stream_rate_incremental(
-            spark, stream_dir, state, str(tmp_path / f"ckr_{tag}"),
-            bucket_seconds=60, max_files_per_trigger=mft)
+        writer = stream_epochs(
+            stream_transcripts(spark, stream_dir, max_files_per_trigger=mft),
+            lambda df: rate_counts(df, bucket_seconds=60), state,
+            str(tmp_path / f"ckr_{tag}"))
         run_stream_once(writer)
         got = sorted(map(tuple, read_rate_autocorr(
             spark, state, lags=(1, 2)).collect()))
@@ -847,8 +868,7 @@ def test_stream_partition_health_equals_batch(spark, stream_dir, tmp_path):
     counts are SUM-monoids, distinct conversations stay exact because
     the (day, conv) key survives to the readout. Both pacings."""
     from logpipe_spark.streaming import (health_partials, health_report,
-                                         read_partition_health,
-                                         stream_partition_health)
+                                         read_partition_health)
 
     batch = spark.read.parquet(stream_dir)
     want = sorted(map(tuple,
@@ -858,13 +878,68 @@ def test_stream_partition_health_equals_batch(spark, stream_dir, tmp_path):
 
     for mft, tag in ((1, "paced"), (None, "oneshot")):
         state = str(tmp_path / f"health_state_{tag}")
-        writer = stream_partition_health(
-            spark, stream_dir, state, str(tmp_path / f"ckh_{tag}"),
-            max_files_per_trigger=mft)
+        writer = stream_epochs(
+            stream_transcripts(spark, stream_dir, max_files_per_trigger=mft),
+            health_partials, state, str(tmp_path / f"ckh_{tag}"))
         run_stream_once(writer)
         got = sorted(map(tuple,
                          read_partition_health(spark, state).collect()))
         assert got == want, tag
+
+
+def test_stream_epochs_replayed_batch_is_idempotent(spark, paced_dir,
+                                                    tmp_path):
+    """Crash after an epoch's partial write and before its checkpoint
+    commit: the restarted monitor replays that batch under the same id,
+    which must rewrite its epoch, not add a second copy of its counts."""
+    from logpipe_spark.streaming import (health_partials, health_report,
+                                         read_partition_health)
+
+    state = str(tmp_path / "health_state")
+    ck = tmp_path / "ck"
+
+    def drain():
+        run_stream_once(stream_epochs(
+            stream_transcripts(spark, paced_dir, max_files_per_trigger=1),
+            health_partials, state, str(ck)))
+
+    drain()
+    commits = sorted((p for p in (ck / "commits").iterdir()
+                      if p.name.isdigit()), key=lambda p: int(p.name))
+    assert len(commits) > 1
+    last = commits[-1]
+    last.unlink()
+    (last.parent / f".{last.name}.crc").unlink(missing_ok=True)
+    drain()
+
+    assert (ck / "commits" / last.name).is_file()   # the replay committed
+    want = sorted(map(tuple, health_report(
+        health_partials(spark.read.parquet(paced_dir))).collect()))
+    got = sorted(map(tuple, read_partition_health(spark, state).collect()))
+    assert got == want
+
+
+def test_stream_epochs_small_partial_writes_one_file(spark, paced_dir,
+                                                     tmp_path):
+    """With AQE on (the session default), a small epoch partial is
+    coalesced by bytes into one shuffle partition, so each epoch writes
+    exactly one parquet file — the file-count bound stream_epochs relies
+    on instead of a fixed coalesce."""
+    import glob
+
+    from logpipe_spark.streaming import health_partials
+
+    assert spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    state = str(tmp_path / "health_state")
+    run_stream_once(stream_epochs(
+        stream_transcripts(spark, paced_dir, max_files_per_trigger=1),
+        health_partials, state, str(tmp_path / "ck")))
+    epochs = sorted(glob.glob(f"{state}/epoch=*"))
+    assert len(epochs) > 1
+    for e in epochs:
+        files = glob.glob(f"{e}/part-*.parquet")
+        assert len(files) == 1, f"{e} wrote {len(files)} files"
 
 
 def test_stream_golden_record_equals_batch(spark, stream_dir, tmp_path):
@@ -872,8 +947,7 @@ def test_stream_golden_record_equals_batch(spark, stream_dir, tmp_path):
     latest-non-null-tool argmax struct, exact distinct roles) merges
     across epochs to exactly the batch golden report. Both pacings."""
     from logpipe_spark.streaming import (golden_partials, golden_report,
-                                         read_golden_record,
-                                         stream_golden_record)
+                                         read_golden_record)
 
     batch = spark.read.parquet(stream_dir)
     want = sorted(map(tuple,
@@ -883,9 +957,9 @@ def test_stream_golden_record_equals_batch(spark, stream_dir, tmp_path):
 
     for mft, tag in ((1, "paced"), (None, "oneshot")):
         state = str(tmp_path / f"gr_state_{tag}")
-        writer = stream_golden_record(
-            spark, stream_dir, state, str(tmp_path / f"ckg_{tag}"),
-            max_files_per_trigger=mft)
+        writer = stream_epochs(
+            stream_transcripts(spark, stream_dir, max_files_per_trigger=mft),
+            golden_partials, state, str(tmp_path / f"ckg_{tag}"))
         run_stream_once(writer)
         got = sorted(map(tuple,
                          read_golden_record(spark, state).collect()))
@@ -948,8 +1022,9 @@ def test_stream_freshness_equals_batch(spark, stream_dir, tmp_path):
     """Freshness monoid: per-epoch (key, n, first_us, last_us) partials
     (SUM/MIN/MAX) merged across the stream == the batch freshness_lag
     scorecard over the whole corpus. Both pacings."""
-    from logpipe_spark.operators.profile import freshness_lag
-    from logpipe_spark.streaming import read_freshness, stream_freshness
+    from logpipe_spark.operators.profile import (freshness_lag,
+                                                 freshness_partials)
+    from logpipe_spark.streaming import read_freshness
 
     batch = spark.read.parquet(stream_dir)
     want = sorted(map(tuple, freshness_lag(batch, "role").collect()))
@@ -959,9 +1034,10 @@ def test_stream_freshness_equals_batch(spark, stream_dir, tmp_path):
 
     for mft, tag in ((1, "paced"), (None, "oneshot")):
         state = str(tmp_path / f"fresh_state_{tag}")
-        writer = stream_freshness(
-            spark, stream_dir, state, str(tmp_path / f"ckf_{tag}"),
-            key="role", max_files_per_trigger=mft)
+        writer = stream_epochs(
+            stream_transcripts(spark, stream_dir, max_files_per_trigger=mft),
+            lambda df: freshness_partials(df, "role"), state,
+            str(tmp_path / f"ckf_{tag}"))
         run_stream_once(writer)
         got = sorted(map(tuple, read_freshness(spark, state, "role").collect()))
         assert got == want, tag
@@ -973,8 +1049,8 @@ def test_stream_growth_accounting_equals_batch(spark, stream_dir, tmp_path):
     fold == batch growth_accounting over the whole corpus. Both
     pacings."""
     from logpipe_spark.operators.segment import growth_accounting
-    from logpipe_spark.streaming import (read_growth_accounting,
-                                         stream_growth_accounting)
+    from logpipe_spark.streaming import (growth_partials,
+                                         read_growth_accounting)
 
     batch = (spark.read.parquet(stream_dir)
              .where(F.col("conv_id").isNotNull() & F.col("ts").isNotNull())
@@ -989,9 +1065,9 @@ def test_stream_growth_accounting_equals_batch(spark, stream_dir, tmp_path):
 
     for mft, tag in ((1, "paced"), (None, "oneshot")):
         state = str(tmp_path / f"ga_state_{tag}")
-        writer = stream_growth_accounting(
-            spark, stream_dir, state, str(tmp_path / f"ckga_{tag}"),
-            max_files_per_trigger=mft)
+        writer = stream_epochs(
+            stream_transcripts(spark, stream_dir, max_files_per_trigger=mft),
+            growth_partials, state, str(tmp_path / f"ckga_{tag}"))
         run_stream_once(writer)
         got = sorted(map(tuple,
                          read_growth_accounting(spark, state).collect()))
@@ -999,15 +1075,13 @@ def test_stream_growth_accounting_equals_batch(spark, stream_dir, tmp_path):
 
 
 def test_stream_postings_epoch_writes_in_parallel(spark, tmp_path):
-    """r04 verdict item 3: a vocab-rich epoch partial must NOT funnel
-    through one write task — with EPOCH_WRITE_PARTITIONS=8 a wide
-    partial lands in multiple parquet files per epoch, and the
-    merge-on-read fold still equals the batch build."""
+    """A vocab-rich epoch partial must NOT funnel through one write
+    task: stream_epochs writes the partial's shuffle partitions as they
+    are, so a wide partial lands in multiple parquet files per epoch, and
+    the merge-on-read fold still equals the batch build."""
     import glob
 
-    from logpipe_spark.streaming.stream import (read_stream_postings,
-                                                run_stream_once,
-                                                stream_postings_incremental)
+    from logpipe_spark.streaming import postings_partials, read_stream_postings
     from logpipe_spark.trainprep.index import build_postings
 
     # 400 distinct words spread the vocab over the shuffle partitions.
@@ -1020,8 +1094,10 @@ def test_stream_postings_epoch_writes_in_parallel(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .coalesce(1).write.parquet(src)
     state = str(tmp_path / "wide_state")
-    writer = stream_postings_incremental(
-        spark, src, state, str(tmp_path / "wide_ck"), max_postings=4)
+    writer = stream_epochs(
+        _file_stream(spark, "doc_id long, text string", src),
+        lambda df: postings_partials(df, max_postings=4), state,
+        str(tmp_path / "wide_ck"))
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                    "false")
     try:
@@ -1048,9 +1124,7 @@ def test_stream_conformal_equals_batch(spark, tmp_path):
     rank: the accumulated-stream conformal readout must equal the
     batch conformal_interval of the full corpus, at two pacings."""
     from logpipe_spark.operators.aggregate import conformal_interval
-    from logpipe_spark.streaming.stream import (read_conformal,
-                                                run_stream_once,
-                                                stream_conformal_monitor)
+    from logpipe_spark.streaming import conformal_partials, read_conformal
 
     rows = [("k%d" % (i % 3), 100 + (i * 7) % 50, 100 + (i * 11) % 40)
             for i in range(90)]
@@ -1067,9 +1141,9 @@ def test_stream_conformal_equals_batch(spark, tmp_path):
 
     for mft, tag in ((1, "paced"), (None, "oneshot")):
         state = str(tmp_path / f"cstate_{tag}")
-        writer = stream_conformal_monitor(
-            spark, src, state, str(tmp_path / f"cck_{tag}"),
-            max_files_per_trigger=mft)
+        writer = stream_epochs(
+            _file_stream(spark, "g string, y long, yh long", src, mft),
+            conformal_partials, state, str(tmp_path / f"cck_{tag}"))
         run_stream_once(writer)
         got = {(r.g, r.n_cal, r.target_rank, r.radius)
                for r in read_conformal(spark, state).collect()}
