@@ -107,8 +107,8 @@ def q_pipeline_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_flagship_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB default plan: the distinct-count shuffle is capped at 2**p
-    # register rows per group (exact countDistinct would Expand + shuffle
-    # one row per distinct conversation). Since round 4 the estimator is
+    # register rows per group (exact countDistinct shuffles one row per
+    # distinct conversation per group). Since round 4 the estimator is
     # the deterministic md5-register HLL (operators/hll.py), which
     # reproduces bit-for-bit in DuckDB — this approximate aggregate passes
     # the EXACT value-hash gate (the former approx_count_distinct HLL++

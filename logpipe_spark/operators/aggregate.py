@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from logpipe_spark.session import local_frame
+
 
 def count_by(df: DataFrame, key: str | Column, alias: str = "turn_count") -> DataFrame:
     """A2 Counter (``aggregateTransformer.js:164-176``): exact count per key."""
@@ -1751,7 +1753,7 @@ def autocorr_from_counts(counts: DataFrame,
     division by zero THROWS, it does not give inf).
     """
     spark = counts.sparkSession
-    lagdf = spark.createDataFrame([(int(lg),) for lg in lags], "lag int")
+    lagdf = local_frame(spark, [(int(lg),) for lg in lags], "lag int")
     left = counts.crossJoin(F.broadcast(lagdf))
     right = counts.select(F.col("m").alias("m2"), F.col("c").alias("c2"))
     paired = left.join(right, F.col("m") + F.col("lag") == F.col("m2"))
@@ -2211,9 +2213,8 @@ def mean_excess_curve(df: DataFrame, key: str, value: Column,
     cum = pv.select("_k", "_v", "_c",
                     F.sum("_c").over(w).cast("bigint").alias("_cum"))
     tot = pv.groupBy("_k").agg(F.sum("_c").cast("bigint").alias("_n"))
-    grid = tot.crossJoin(F.broadcast(
-        cum.sparkSession.createDataFrame(
-            [(int(p),) for p in pcts], "pct int")))
+    grid = tot.crossJoin(F.broadcast(local_frame(
+        cum.sparkSession, [(int(p),) for p in pcts], "pct int")))
     rank = grid.select(
         "_k", "_n", "pct",
         F.expr("(_n * pct + 99) div 100").cast("bigint").alias("_r"))
@@ -2374,7 +2375,7 @@ def cross_corr_from_counts(a: DataFrame, b: DataFrame,
     Returns ``(lag, n_pairs, r)``.
     """
     spark = a.sparkSession
-    lagdf = spark.createDataFrame([(int(lg),) for lg in lags], "lag int")
+    lagdf = local_frame(spark, [(int(lg),) for lg in lags], "lag int")
     left = a.crossJoin(F.broadcast(lagdf))
     right = b.select(F.col("m").alias("m2"), F.col("c").alias("c2"))
     paired = left.join(right, F.col("m") + F.col("lag") == F.col("m2"))

@@ -38,6 +38,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from logpipe_spark.session import local_frame
+
 __all__ = [
     "ks_drift",
     "ks_from_counts",
@@ -1946,9 +1948,8 @@ def shift_function(
               .agg(F.sum("ca").cast("bigint").alias("_na"),
                    F.sum("cb").cast("bigint").alias("_nb"))
               .where((F.col("_na") >= min_n) & (F.col("_nb") >= min_n)))
-    grid = totals.crossJoin(F.broadcast(
-        per_v.sparkSession.createDataFrame(
-            [(int(p),) for p in pcts], "pct int")))
+    grid = totals.crossJoin(F.broadcast(local_frame(
+        per_v.sparkSession, [(int(p),) for p in pcts], "pct int")))
     rnk = grid.select(
         key, "pct",
         F.expr("(_na * pct + 99) div 100").cast("bigint").alias("_ra"),
@@ -2266,8 +2267,8 @@ def permutation_test(
         F.when((F.col("n_a") > 0) & (F.col("n_b") > 0), d_obs)
         .alias("diff_obs"))
     spark = df.sparkSession
-    seeds = spark.createDataFrame([(s,) for s in range(1, n_perms + 1)],
-                                  "seed int")
+    seeds = local_frame(spark, [(s,) for s in range(1, n_perms + 1)],
+                        "seed int")
     h = F.conv(F.substring(
         F.md5(F.concat_ws(":", F.col("seed").cast("string"),
                           F.col("_u"))), 1, 8), 16, 10).cast("bigint")
@@ -2825,8 +2826,8 @@ def permutation_test_by(
         F.when((F.col("n_a") > 0) & (F.col("n_b") > 0), d_obs)
         .alias("diff_obs"))
     spark = df.sparkSession
-    seeds = spark.createDataFrame([(s,) for s in range(1, n_perms + 1)],
-                                  "seed int")
+    seeds = local_frame(spark, [(s,) for s in range(1, n_perms + 1)],
+                        "seed int")
     h = F.conv(F.substring(
         F.md5(F.concat_ws(":", F.col("seed").cast("string"),
                           F.col("_u"))), 1, 8), 16, 10).cast("bigint")

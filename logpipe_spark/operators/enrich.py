@@ -5,6 +5,9 @@ static per-run constants become literal columns (Catalyst constant-folds
 them), and — per the north_rule — the general case becomes a **broadcast hash
 join** against a small ``(role, tool) → attributes`` dimension: the small side
 ships to every executor, so the 100 TB fact side never shuffles for this join.
+The dimension is a driver-local relation (``transcripts.lookup_df`` builds it
+with ``session.local_frame``), so the broadcast's build side is a
+``LocalTableScan`` and no Python-worker job runs behind it.
 """
 
 from __future__ import annotations

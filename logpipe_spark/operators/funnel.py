@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from logpipe_spark.session import local_frame
+
 
 def funnel_steps(
     events: DataFrame,
@@ -396,8 +398,8 @@ def funnel_windowed(
         f"(acc, e) -> named_struct({', '.join(fields)}))")
     um = per_user.select(fold.alias("_st")).select(
         F.col("_st.m").alias("m"))
-    steps_df = events.sparkSession.createDataFrame(
-        [(i, s) for i, s in enumerate(steps)], "step_idx int, step string")
+    steps_df = local_frame(events.sparkSession, list(enumerate(steps)),
+                           "step_idx int, step string")
     counts = (um.crossJoin(F.broadcast(steps_df))
               .where(F.col("m") >= F.col("step_idx") + 1)
               .groupBy("step_idx", "step")

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from logpipe_spark.session import local_frame
+
 
 def heavy_keys(df: DataFrame, key: str, min_fraction: float = 0.01,
                sample_fraction: float | None = None) -> DataFrame:
@@ -266,7 +268,7 @@ def ams_f2(df: DataFrame, key: str, k: int = 9,
         F.count(F.lit(1)).cast("bigint").alias("n_values"),
         F.sum(F.col("_c").cast("decimal(38,0)") * F.col("_c"))
         .cast("decimal(38,0)").alias("_f2"))
-    seeds = spark.createDataFrame([(i,) for i in range(k)], "seed int")
+    seeds = local_frame(spark, [(i,) for i in range(k)], "seed int")
     if hash_fn == "md5":
         h = F.conv(F.substring(
             F.md5(F.concat_ws(":", F.col("seed").cast("string"),

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logpipe_spark.session import local_frame
+
 __all__ = ["density_neighbor_counts", "morans_i"]
 
 
@@ -73,7 +75,8 @@ def density_neighbor_counts(
         F.floor(F.col("x") / F.lit(eps)).cast("bigint").alias("cx"),
         F.floor(F.col("y") / F.lit(eps)).cast("bigint").alias("cy"),
     )
-    offsets = spark.createDataFrame(
+    offsets = local_frame(
+        spark,
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
         "dx int, dy int",
     )
@@ -175,8 +178,8 @@ def morans_i(
     dev = cells.crossJoin(F.broadcast(tot)).select(
         "cx", "cy", "n",
         (F.col("n") * F.col("c") - F.col("s")).cast("bigint").alias("dv"))
-    offsets = spark.createDataFrame(
-        [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx int, dy int")
+    offsets = local_frame(
+        spark, [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx int, dy int")
     probe = dev.crossJoin(F.broadcast(offsets)).select(
         (F.col("cx") + F.col("dx")).alias("cx"),
         (F.col("cy") + F.col("dy")).alias("cy"),

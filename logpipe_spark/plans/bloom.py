@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from logpipe_spark.session import local_frame
+
 # 32-bit words inside bigints: 1 << 31 still fits, no sign games.
 _WORD_BITS = 32
 
@@ -118,8 +120,9 @@ def bloom_as_array(words: DataFrame, m_bits: int) -> DataFrame:
     numpy scatter), not `collect()`: at the 1e9-key m=2^28 sizing the
     word table is 8M rows, and 8M PySpark Row objects cost GBs of Python
     object overhead where the Arrow batch + int64 scatter stays within
-    ~2×8 bytes/word. The returned frame is a LocalRelation, so
-    downstream broadcasts ship it without re-running anything."""
+    ~2×8 bytes/word. The returned frame is a LocalRelation
+    (``local_frame`` ships the dense array to the JVM as one Arrow list),
+    so downstream broadcasts ship it without re-running anything."""
     n_words = m_bits // _WORD_BITS
     import numpy as np
     from pyspark.sql import types as T
@@ -141,8 +144,7 @@ def bloom_as_array(words: DataFrame, m_bits: int) -> DataFrame:
         T.StructField("bloom", T.ArrayType(T.LongType())),
         T.StructField("params", T.StringType()),
     ])
-    return words.sparkSession.createDataFrame([(dense.tolist(), stamp)],
-                                              schema)
+    return local_frame(words.sparkSession, [(dense, stamp)], schema)
 
 
 def bloom_might_contain(key: Column, bloom: Column, m_bits: int,

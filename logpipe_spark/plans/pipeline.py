@@ -11,7 +11,10 @@ Scale design (100 TB / 10^12 turns):
 - input is read with partition-level parallelism and never repartitioned
   up front: parse, enrich and route are narrow, and each conv-level
   aggregate pays its own exchange;
-- the lookup join is broadcast (zero shuffle of the fact table);
+- the lookup join is broadcast (zero shuffle of the fact table), and the
+  broadcast dimension is a driver-local relation (``lookup_df`` builds it
+  with ``session.local_frame``): its build side is a ``LocalTableScan``,
+  so the plan holds no Python RDD and the broadcast runs no Python job;
 - the routed fan-out writes every sink in one ``partitionBy(sink)`` job
   and caches nothing;
 - per-sink aggregates read the written sinks back (only ``n_tokens`` and
@@ -102,9 +105,12 @@ def flagship_summary(spark: SparkSession, transcripts: DataFrame,
     """One-frame rollup used by the driver smoke check: per-(role, tool)
     turn counts + token stats over clean rows, ordered deterministically.
 
-    ``approx_distinct=True`` is the 100 TB default: ``countDistinct`` plans
-    an Expand + second exchange (every row duplicated per aggregate), while
-    the md5-register HLL (operators/hll.py) caps the distinct-count shuffle
+    ``approx_distinct=True`` is the 100 TB default. The exact
+    ``countDistinct`` is this frame's only distinct aggregate, so it plans
+    no Expand: four HashAggregates over two hash exchanges, the first
+    keyed on (role, tool, team, conv_id) and so carrying one row per
+    distinct conversation per group, then the ``orderBy`` range exchange.
+    The md5-register HLL (operators/hll.py) caps the distinct-count shuffle
     at 2**p rows per group regardless of conversation cardinality — and,
     unlike the engine-private ``approx_count_distinct`` HLL++, the estimate
     reproduces bit-for-bit in DuckDB, so the approximate flagship passes

@@ -11,8 +11,10 @@ is replaced wholesale by Spark's scheduler; nothing to configure beyond this.
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -62,3 +64,28 @@ def build_session(
 def get_active_or_build(**kw) -> SparkSession:
     active = SparkSession.getActiveSession()
     return active if active is not None else build_session(**kw)
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: StructType | str) -> DataFrame:
+    """A small driver-side frame (dimension, seed or grid rows) as a
+    ``LocalRelation``.
+
+    ``rows`` are tuples in ``schema`` order; ``schema`` is a StructType or
+    a DDL string (``"seed int"``). The rows go to the JVM as one Arrow
+    table, so the plan holds a ``LocalTableScan`` and a broadcast of the
+    frame collects it in the JVM. ``spark.createDataFrame(<list>)`` instead
+    plans a ``Scan ExistingRDD`` over a Python RDD: every broadcast of it
+    runs its job through Python workers. ``createDataFrame(<pandas frame>)`` falls back to
+    that path for zero rows or a failed Arrow conversion; a pyarrow table
+    has no fallback, so an empty grid is an empty LocalRelation, and a row
+    of the wrong width or a value that does not fit its column raises.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (schema if isinstance(schema, StructType)
+              else StructType.fromDDL(schema))
+    table = pa.Table.from_struct_array(
+        pa.array(rows, pa.struct(list(to_arrow_schema(struct)))))
+    return spark.createDataFrame(table, struct)

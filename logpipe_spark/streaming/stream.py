@@ -172,9 +172,12 @@ def conversation_sessions(stream: DataFrame, gap_ms: int = 3_600_000,
     deterministic in EVENT time: two runs over the same data at different
     paces/batch splits emit identical sessions (the previous
     processing-time variant emitted whenever the executor happened to be
-    idle 2 s — wall-clock sensitive under load). Rows later than the
-    watermark delay may open a spurious successor session — the standard
-    watermark contract; size ``watermark`` to the source's disorder bound.
+    idle 2 s — wall-clock sensitive under load). Rows behind the
+    watermark are dropped before the state function sees them (the query
+    progress counts them in ``numRowsDroppedByWatermark``), so emission is
+    pacing-independent only when ``watermark`` covers the source's
+    disorder bound — for a file source, the event-time span of any file
+    read after another.
     """
     return (
         stream.withWatermark("ts", watermark)
@@ -701,11 +704,10 @@ def stream_cusum_monitor(stream: DataFrame, target: int,
     segments are complete by construction (event-time closed), so the
     epoch-ordered fold is bit-exactly the global scan. State is bounded
     by one epoch of one tool's events (the sessionize bounded-state
-    discipline; shrink ``epoch_seconds`` for hotter keys). Rows later
-    than the watermark re-open a closed epoch and emit a SECOND state
-    row for it, breaking order-exactness — the standard watermark
-    contract (size ``watermark`` to the source's disorder bound; same
-    caveat as :func:`conversation_sessions`).
+    discipline; shrink ``epoch_seconds`` for hotter keys). Rows behind
+    the watermark are dropped before the state function sees them, so
+    the fold is exact only when ``watermark`` covers the source's
+    disorder bound (same contract as :func:`conversation_sessions`).
     """
     from logpipe_spark.functions.textfn import token_count
 

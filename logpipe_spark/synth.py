@@ -75,15 +75,15 @@ def synth_transcripts(
         tool.alias("tool"),
         F.timestamp_seconds(F.lit(1_700_000_000) + (rid % 86_400)).alias("ts"),
     )
-    from pyspark.sql import Window
-    w = Window.partitionBy("conv_id").orderBy("_id")
-    out = out.withColumn(
-        "turn_idx", (F.row_number().over(w) - 1).cast("int")
-    ).drop("_id").select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    # Explicit hash(conv_id) partitioning (north_rule): guarantees the
-    # written corpus exposes `partitions`-way read parallelism — AQE would
-    # otherwise coalesce the window's shuffle into a handful of output files
-    # and cap every downstream consumer's parallelism at that file count.
+    # Explicit hash(conv_id) partitioning (north_rule) BEFORE the window,
+    # which reuses it, so the written corpus exposes `partitions`-way read
+    # parallelism. After the window it would repeat the window's own
+    # hashpartitioning(conv_id): Spark drops it as redundant and AQE
+    # coalesces the window's shuffle, down to one file at test size.
     out = out.repartition(
         partitions or spark.sparkContext.defaultParallelism, "conv_id")
-    return out
+    from pyspark.sql import Window
+    w = Window.partitionBy("conv_id").orderBy("_id")
+    return out.withColumn(
+        "turn_idx", (F.row_number().over(w) - 1).cast("int")
+    ).drop("_id").select("conv_id", "turn_idx", "role", "text", "tool", "ts")

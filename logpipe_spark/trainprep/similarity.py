@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from logpipe_spark.session import local_frame
+
 
 def _dvec(col: str) -> Column:
     return F.expr(f"transform({col}, x -> cast(x AS double))")
@@ -703,8 +705,8 @@ def rebalance_ivf_index(spark, path: str, max_list_size: int,
             plan_rows.append((lbl, slot, sizes[(lbl, slot)],
                               next_slot[lbl]))
             next_slot[lbl] += 1
-        split_plan = F.broadcast(spark.createDataFrame(
-            plan_rows, "label int, slot int, n bigint, new_slot int"))
+        split_plan = F.broadcast(local_frame(
+            spark, plan_rows, "label int, slot int, n bigint, new_slot int"))
         cond = reduce(or_, ((F.col("label") == l) & (F.col("slot") == s)
                             for l, s in over))
         members = lists.where(cond)  # (label, slot) partition pruning
@@ -972,8 +974,7 @@ def rbo_overlap(truth: DataFrame, found: DataFrame, k: int = 5,
                      F.col("rank").alias("_rf"))
     both = t.join(f, ["query_id", "neighbor_id"]).select(
         "query_id", F.greatest("_rt", "_rf").cast("int").alias("_mr"))
-    depths = spark.createDataFrame([(d,) for d in range(1, k + 1)],
-                                   "d int")
+    depths = local_frame(spark, [(d,) for d in range(1, k + 1)], "d int")
     grid = (truth.select("query_id").distinct()
             .crossJoin(F.broadcast(depths)))
     ov = (both.crossJoin(F.broadcast(depths))

@@ -97,8 +97,9 @@ LOOKUP_ROWS = _lookup_rows()
 
 def lookup_df(spark: SparkSession) -> DataFrame:
     from logpipe_spark.schemas import LOOKUP_SCHEMA
+    from logpipe_spark.session import local_frame
 
-    return spark.createDataFrame(LOOKUP_ROWS, schema=LOOKUP_SCHEMA)
+    return local_frame(spark, LOOKUP_ROWS, LOOKUP_SCHEMA)
 
 
 def lookup_values_sql() -> str:

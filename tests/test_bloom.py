@@ -74,6 +74,8 @@ def test_bloom_plan_fact_side_never_shuffles(spark):
     # scan -> filter with no hashpartitioning on l_orderkey
     fact_branch = plan.split("BroadcastNestedLoopJoin")[1]
     assert "hashpartitioning(l_orderkey" not in fact_branch
+    # the broadcast 1-row array is driver-local: no Python RDD behind it
+    assert "ExistingRDD" not in plan
 
 
 def test_bloom_array_is_single_row(spark):
@@ -82,6 +84,10 @@ def test_bloom_array_is_single_row(spark):
     rows = arr.collect()
     assert len(rows) == 1
     assert len(rows[0]["bloom"]) == M_BITS // 32
+    # a LocalRelation, as bloom_as_array's docstring says: broadcasting it
+    # ships the driver-side rows through no Python worker
+    analyzed = arr._jdf.queryExecution().analyzed().toString()
+    assert analyzed.startswith("LocalRelation"), analyzed
 
 
 def test_bloom_prebuilt_params_mismatch_raises(spark):

@@ -8,10 +8,16 @@ Invariants:
   Arrow-vectorized forms ArrowEvalPython / FlatMapGroupsInPandas /
   MapInPandas are the allowed Python surfaces);
 - every parquet scan carries a pruned ReadSchema (the scan node exists —
-  i.e. the query didn't collapse to a LocalTableScan of collected rows).
+  i.e. the query didn't collapse to a LocalTableScan of collected rows);
+- no RDD scan over a Python RDD in any query: a Python-list
+  ``createDataFrame`` (or a failed Arrow conversion falling back to one)
+  plans one, and every broadcast of it runs a Python job; outside the
+  MATERIALIZED and CHECKPOINTED queries no Scan ExistingRDD at all.
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -35,18 +41,69 @@ MATERIALIZED = {"dedup_incremental", "read_changes", "read_changes_evo",
                 "postings_incremental", "bradley_terry",
                 "post_maintenance"}
 
+# Queries whose plans read a localCheckpoint(eager=True) taken inside the
+# call (the connected-components rounds of curate.dup_clusters truncate
+# their lineage per round): Scan ExistingRDD over a materialized RDD, not
+# a Python one, which python_rdd_scans tells apart.
+CHECKPOINTED = {"dup_clusters", "dup_cluster_sizes", "dedup_keep_list",
+                "curation_funnel"}
+
 
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_plan_invariants(name, query_builds):
     plan = query_builds.plan(name)
     for bad in FORBIDDEN:
         assert bad not in plan, f"{name}: forbidden operator {bad} in plan"
+    assert query_builds.python_rdd_scans(name) == 0, (
+        f"{name}: scan over a Python RDD (build driver-side rows with "
+        "session.local_frame)")
     if name in MATERIALIZED:
         assert "ExistingRDD" in plan
         return
+    if name not in CHECKPOINTED:
+        assert "ExistingRDD" not in plan, (
+            f"{name}: Scan ExistingRDD in plan (a Python-RDD frame or a "
+            "checkpoint on the query path)")
     # every query ultimately reads the driver parquet tables
     assert "Scan parquet" in plan or "FileScan parquet" in plan, (
         f"{name}: no parquet scan in plan (driver-side materialization?)")
+
+
+def test_pipeline_plans_broadcast_a_local_dimension(spark, tmp_path,
+                                                    monkeypatch):
+    """Both benchmarked plans (the frame run_pipeline_fanout writes, and
+    flagship_summary) broadcast the lookup dimension from a LocalTableScan
+    and hold no Python RDD: no Python-worker job runs in either."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from logpipe_spark.plans.pipeline import (flagship_summary,
+                                              run_pipeline_fanout)
+    from logpipe_spark.transcripts import derive_transcripts
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kwargs):
+        written.append(
+            self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    transcripts = derive_transcripts(spark, SF_TINY)
+    out = run_pipeline_fanout(spark, transcripts, str(tmp_path / "sinks"))
+    assert len(written) == 1
+    plans = {
+        "fanout write": written[0],
+        "agg_conv_spans": out["agg_conv_spans"]._jdf.queryExecution()
+        .executedPlan().toString(),
+        "flagship_summary": flagship_summary(spark, transcripts)._jdf
+        .queryExecution().executedPlan().toString(),
+    }
+    for name, plan in plans.items():
+        assert "ExistingRDD" not in plan, f"{name}: Python RDD in plan"
+        # the broadcast's build side is the LocalTableScan itself
+        assert re.search(r"BroadcastExchange .*\n *\+- LocalTableScan",
+                         plan), f"{name}: lookup broadcast not a local scan"
 
 
 @pytest.mark.parametrize("name", ["top_ngrams", "top_paths",

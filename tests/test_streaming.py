@@ -12,6 +12,13 @@ from logpipe_spark.streaming import (conversation_sessions, run_stream_once,
 from logpipe_spark.synth import synth_transcripts
 
 
+# Watermark for the stateful monitors drained from ``stream_dir``: every
+# part file of a conv_id-partitioned corpus spans the corpus's whole event
+# time (under an hour), and a row behind the watermark is dropped, so at
+# one file per trigger a shorter delay loses the rows of every later file.
+SOURCE_WATERMARK = "1 hour"
+
+
 def _file_stream(spark, schema, src, mft=None):
     """Parquet file source with a non-transcript schema, ``mft`` files per
     trigger (None: everything available in one batch)."""
@@ -24,9 +31,20 @@ def _file_stream(spark, schema, src, mft=None):
 @pytest.fixture(scope="module")
 def stream_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("stream_src"))
-    synth_transcripts(spark, n_turns=3000, n_convs=60,
-                      error_every=25).write.mode("overwrite").parquet(d)
+    # four part files: every pacing below runs two to four epochs
+    synth_transcripts(spark, n_turns=3000, n_convs=60, error_every=25,
+                      partitions=4).write.mode("overwrite").parquet(d)
     return d
+
+
+def test_stream_dir_spans_several_epochs(stream_dir):
+    """The pacing tests over ``stream_dir`` drain it at one or two files
+    per trigger; they exercise the cross-epoch merge only if the corpus
+    is written as several part files (``synth_transcripts`` keeps its
+    explicit conv_id partitioning through the write)."""
+    import glob
+
+    assert len(glob.glob(f"{stream_dir}/part-*.parquet")) >= 4
 
 
 @pytest.fixture(scope="module")
@@ -72,7 +90,7 @@ def _run_sessions(spark, src, ck, name, mft):
     sessions keyed by conv_id, sentinel flush convs excluded."""
     stream = stream_transcripts(spark, src, max_files_per_trigger=mft)
     sessions = conversation_sessions(stream, gap_ms=3_600_000,
-                                     watermark="10 seconds")
+                                     watermark=SOURCE_WATERMARK)
     q = (sessions.writeStream.format("memory").queryName(name)
          .outputMode("append")
          .option("checkpointLocation", ck)
@@ -517,7 +535,7 @@ def _run_cusum(spark, src, ck, name, mft):
 
     stream = stream_transcripts(spark, src, max_files_per_trigger=mft)
     segs = stream_cusum_monitor(stream, target=8, epoch_seconds=3600,
-                                watermark="10 seconds")
+                                watermark=SOURCE_WATERMARK)
     q = (segs.writeStream.format("memory").queryName(name)
          .outputMode("append")
          .option("checkpointLocation", ck)
@@ -752,7 +770,7 @@ def _run_context(spark, src, ck, name, mft, budget):
 
     stream = stream_transcripts(spark, src, max_files_per_trigger=mft)
     out = stream_context_overflow(stream, budget=budget,
-                                  watermark="10 seconds")
+                                  watermark=SOURCE_WATERMARK)
     q = (out.writeStream.format("memory").queryName(name)
          .outputMode("append")
          .option("checkpointLocation", ck)
@@ -970,7 +988,7 @@ def _run_apdex(spark, src, ck, name, mft):
     from logpipe_spark.streaming.stream import stream_apdex
 
     stream = stream_transcripts(spark, src, max_files_per_trigger=mft)
-    out = stream_apdex(stream, watermark="10 seconds", sla_scale=120)
+    out = stream_apdex(stream, watermark=SOURCE_WATERMARK, sla_scale=120)
     q = (out.writeStream.format("memory").queryName(name)
          .outputMode("append")
          .option("checkpointLocation", ck)
